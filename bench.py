@@ -848,6 +848,9 @@ def main() -> None:
 
     _import_plans()
     spark = get_spark(app_name="mwa-spark-bench")
+    # the core count the session actually runs on (get_spark's rule):
+    # names the artifact and decides whether the 32-core gate is fatal
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
     # JVM/codegen warmup: run every headline query once at the smoke SF so
     # the timed runs measure steady-state execution, not one-time JIT of
@@ -1071,8 +1074,7 @@ def main() -> None:
                 if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
             ]
             rnd = str(max(recorded, default=0) + 1)
-        cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        suffix = f"_c{cpus_env}" if cpus_env and cpus_env != "32" else ""
+        suffix = f"_c{cpus}" if cpus != "32" else ""
         stem = f"BENCH_FULL_r{int(rnd):02d}{suffix}"
         target = os.path.join(repo_dir, f"{stem}.json")
         k = 0
@@ -1170,11 +1172,10 @@ def main() -> None:
         # NOT fatal — VERDICT r15: the driver's 8-core scaling run
         # breached one 32-core bound, exited 1, and the whole scaling
         # measurement was discarded.
-        cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        if cpus_env is None or cpus_env == "32":
+        if cpus == "32":
             sys.exit(1)
         print(
-            f"(gate informational at SPARK_GRAFT_CPUS={cpus_env}: bounds "
+            f"(gate informational at {cpus} cores: bounds "
             "are 32-core-calibrated; failures recorded, rc stays 0)",
             file=sys.stderr,
         )

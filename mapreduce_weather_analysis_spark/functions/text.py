@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .compat import HASH_PRIME
+from .compat import HASH_PRIME, portable_hash32, portable_hash32_sql
 
 # ---------------------------------------------------------------------------
 # Tokenize: lowercase, trim, split on whitespace, drop empties.
@@ -100,15 +100,11 @@ def shingles_sql(toks_expr: str, n: int = 3) -> str:
 
 
 def hashed_list(arr: Column) -> Column:
-    return F.transform(
-        arr,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-        % HASH_PRIME,
-    )
+    return F.transform(arr, lambda s: portable_hash32(s) % HASH_PRIME)
 
 
 def hashed_list_sql(arr_expr: str) -> str:
     return (
         f"list_transform({arr_expr}, "
-        f"s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % {HASH_PRIME})"
+        f"s -> {portable_hash32_sql('s')} % {HASH_PRIME})"
     )

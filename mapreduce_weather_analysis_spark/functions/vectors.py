@@ -43,6 +43,27 @@ def cosine_sql(a: str, b: str) -> str:
     return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
 
 
+def sq_l2(a: Column | str, b: Column | str) -> Column:
+    """Squared L2 as the left fold ``0.0 + (a[1]-b[1])² + ...`` over
+    element index — the distance every IVF/PQ/k-means assignment ranks
+    by. Bit-identical to :func:`sq_l2_sql` (same IEEE ops, same order)."""
+    aa = F.col(a) if isinstance(a, str) else a
+    bb = F.col(b) if isinstance(b, str) else b
+    return F.aggregate(
+        F.zip_with(aa, bb, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, z: acc + z,
+    )
+
+
+def sq_l2_sql(a: str, b: str, dim: int) -> str:
+    """DuckDB twin of :func:`sq_l2` for ``dim``-long lists."""
+    return (
+        f"list_sum(list_transform(range(1, {dim} + 1), "
+        f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
+    )
+
+
 def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     """``dot`` for a KNOWN fixed dimension, unrolled into a flat
     left-associated sum: ``0.0 + a[1]*b[1] + ... + a[dim]*b[dim]``.
@@ -75,8 +96,7 @@ def sq_l2_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Squared L2 for a KNOWN fixed dimension, unrolled into a flat
     left-associated sum: ``0.0 + (a[1]-b[1])² + ... + (a[dim]-b[dim])²``.
 
-    Bit-identical to the ``aggregate(zip_with((x-y)*(x-y)), 0.0, +)``
-    fold the IVF/PQ operators assign with (same IEEE subtractions,
+    Bit-identical to the :func:`sq_l2` fold (same IEEE subtractions,
     multiplications and additions in the same index order from the same
     0.0 seed) — but codegen-compiled instead of interpreted per
     element; the same swap :func:`dot_unrolled` documents, for distance

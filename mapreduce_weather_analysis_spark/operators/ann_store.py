@@ -35,8 +35,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import sq_l2
 from ..sources.tables import load_table
-from .ivf import IVF_NPROBE, _sq_l2, ivf_index
+from .ivf import IVF_NPROBE, ivf_index
 from .pq import _subvectors, pq_index
 
 INDEX_ROOT = os.environ.get("SPARK_GRAFT_INDEX_DIR", "/tmp/spark_graft_index")
@@ -154,7 +155,7 @@ def ivfpq_search(
         F.col("embedding").cast("array<double>").alias("qv"),
     )
     qc = qv.crossJoin(F.broadcast(centroids)).select(
-        "query_id", _sq_l2("qv", "c").alias("dist"), "cluster"
+        "query_id", sq_l2("qv", "c").alias("dist"), "cluster"
     )
     probes = (
         qc.groupBy("query_id")
@@ -172,7 +173,7 @@ def ivfpq_search(
     # LUT: unquantized query subvectors × broadcast codebook
     lut = _subvectors(queries, "query_id").join(
         F.broadcast(codebook), "m"
-    ).select("query_id", "m", "code", _sq_l2("v", "c").alias("dd"))
+    ).select("query_id", "m", "code", sq_l2("v", "c").alias("dd"))
 
     # candidate codes straight off the inverted lists: broadcast(probes)
     # joins the cluster-partitioned cells relation, so dynamic partition
@@ -642,7 +643,7 @@ def search_vectors(
             F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti"
         )
     qc = qv.crossJoin(F.broadcast(centroids)).select(
-        "query_id", "qv", _sq_l2("qv", "c").alias("dist"), "cluster"
+        "query_id", "qv", sq_l2("qv", "c").alias("dist"), "cluster"
     )
     probes = (
         qc.groupBy("query_id")
@@ -695,7 +696,7 @@ def range_search_vectors(
     centroids = spark.read.parquet(os.path.join(index_path, "centroids"))
     vecs = spark.read.parquet(os.path.join(index_path, "vecs"))
     qc = qv.crossJoin(F.broadcast(centroids)).select(
-        "query_id", "qv", _sq_l2("qv", "c").alias("dist"), "cluster"
+        "query_id", "qv", sq_l2("qv", "c").alias("dist"), "cluster"
     )
     probes = (
         qc.groupBy("query_id")
@@ -805,7 +806,7 @@ def ivf_search_negatives(
         F.col("label").alias("qlabel"),
     )
     qc = qv.crossJoin(F.broadcast(centroids)).select(
-        "query_id", "qv", "qlabel", _sq_l2("qv", "c").alias("dist"), "cluster"
+        "query_id", "qv", "qlabel", sq_l2("qv", "c").alias("dist"), "cluster"
     )
     probes = (
         qc.groupBy("query_id")

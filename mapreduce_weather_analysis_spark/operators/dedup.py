@@ -1,8 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, all expressed as compositions of built-in DataFrame ops
-(no Python on the hot path — md5/array/bitwise expressions are JVM-side,
-whole-stage-codegen'd):
+Four families, built from DataFrame ops (md5/array/bitwise expressions
+JVM-side, whole-stage-codegen'd) plus ONE Arrow ``mapInPandas`` kernel:
+the MinHash signature (:func:`minhash_signatures_kernel`), which folds
+each document's distinct shingles in a single zero-shuffle map stage
+and hashes every shingle once per task through a memo:
 
 * exact           — hash groupBy on content (or any key list)
 * MinHash + LSH   — shingle → k-permutation minhash signature → banded
@@ -30,10 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.compat import HASH_PRIME
+from ..functions.compat import HASH_PRIME, portable_hash32
 from ..functions.text import (
     WS_CLASS,
-    hashed_list,
     hashed_list_sql,
     shingles,
     shingles_sql,
@@ -137,18 +138,6 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = SHINGLE_N) 
     )
 
 
-def _perm_min(hv: Column, a: int, b: int) -> Column:
-    # NB: a proper closure — extra lambda params (even defaulted) confuse
-    # pyspark's higher-order-function arity detection.
-    return F.array_min(F.transform(hv, lambda x: (x * a + b) % HASH_PRIME))
-
-
-def minhash_signature(sh_col: Column, k: int = MINHASH_K) -> Column:
-    """k-long minhash signature of a shingle array (single JVM expression)."""
-    hv = hashed_list(sh_col)
-    return F.array(*[_perm_min(hv, a, b) for a, b in minhash_perms(k)])
-
-
 def lsh_band_keys(
     sig_col: Column, k: int = MINHASH_K, bands: int = LSH_BANDS
 ) -> Column:
@@ -162,37 +151,6 @@ def lsh_band_keys(
     )
 
 
-def _portable_hash_col(c: str) -> Column:
-    return (
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % HASH_PRIME
-    )
-
-
-def minhash_signatures_relational(
-    exd: DataFrame, k: int = MINHASH_K
-) -> DataFrame:
-    """(doc_id, sig) from distinct (doc_id, s) shingle rows: codegen hash →
-    grouped per-perm MIN.
-
-    Semantically identical to :func:`minhash_signature` but ~10× faster:
-    higher-order array lambdas are interpreted (and re-inline the md5 per
-    permutation), whereas this shape hashes each shingle ONCE in a
-    whole-stage-codegen projection and reduces with a single partial+final
-    hash aggregate — the plan that scales to 10^10 docs.
-    """
-    hashed = exd.select("doc_id", _portable_hash_col("s").alias("hx"))
-    aggs = [
-        F.min((F.col("hx") * a + b) % HASH_PRIME).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_perms(k))
-    ] + [F.count(F.lit(1)).alias("n_sh")]
-    sigcols = hashed.groupBy("doc_id").agg(*aggs)
-    return sigcols.select(
-        "doc_id",
-        F.array(*[f"mh_{i}" for i in range(k)]).alias("sig"),
-        "n_sh",
-    )
-
-
 def minhash_signatures_kernel(
     docs: DataFrame,
     text_col: str,
@@ -201,19 +159,25 @@ def minhash_signatures_kernel(
     n: int = SHINGLE_N,
 ) -> DataFrame:
     """(doc_id, sig, n_sh) straight from the documents in ONE zero-shuffle
-    Arrow map stage — the r15 q_stream_minhash_ledger kernel lifted to
-    the batch LSH chain (VERDICT r15 ask #5).
+    Arrow map stage. The one MinHash signature implementation: the batch
+    LSH chain and the streaming ledger (q_stream_minhash_ledger) both
+    call it, and tests/test_extensions.py pins it to the relational
+    shingle → hash → grouped-MIN twin, which paid three exchanges
+    (window lead, distinct, groupBy) for per-document work.
 
-    Replaces ``minhash_signatures_relational(shingle_rows(...))``, which
-    paid three exchanges (window lead, distinct, groupBy) for what is
-    per-document work. Exactness is the ledger kernel's argument
-    verbatim: hashlib md5 prefix mod P is portable_hash32_py, the pinned
-    third twin of the JVM/DuckDB hash (tests/test_properties.py); the
-    k-permutation fold is vectorized int64 ``(hx·a+b) mod P`` argmin
-    with products < 2⁶² (exact, overflow-free); per-shingle hashes are
-    memoized across the batch (near-dup corpora repeat shingles
-    heavily); min is order-independent so the set-vs-sorted iteration
-    order cannot matter."""
+    Exactness: tokenization stays JVM-side (the engine-pinned
+    lower/trim/WS_CLASS split) and docs under ``n`` tokens drop before
+    the map; shingles are joined with single spaces (exact string
+    equality with concat_ws over slice); hashlib md5 prefix mod P is
+    portable_hash32_py, the pinned third twin of the JVM/DuckDB hash
+    (tests/test_properties.py); the k-permutation fold is vectorized
+    int64 ``(hx·a+b) mod P`` min with products < 2⁶² (exact,
+    overflow-free); ``n_sh`` counts DISTINCT shingles. Per-shingle
+    hashes are memoized for the whole task (near-dup corpora repeat
+    shingles heavily); min is order-independent so the set iteration
+    order cannot matter. The md5 line stays inline because the closure
+    must pickle by value: executors cannot import this package from a
+    foreign cwd."""
     from ..functions.text import has_min_tokens
 
     perms = minhash_perms(k)
@@ -574,42 +538,19 @@ def containment_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _ones_at_bit(hv: Column, j: int) -> Column:
-    return F.aggregate(
-        hv,
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + F.shiftright(x, j).bitwiseAND(F.lit(1)),
-    )
-
-
-def simhash32(toks_col: Column) -> Column:
-    """32-bit SimHash over the token multiset: bit j is 1 iff more than half
-    the token hashes have bit j set (strict majority)."""
-    hv = hashed_list(toks_col)
-    n = F.size(hv)
-    out = F.lit(0).cast("bigint")
-    for j in range(SIMHASH_BITS):
-        ones = _ones_at_bit(hv, j)
-        out = out + F.when(ones * 2 > n, F.lit(1 << j).cast("bigint")).otherwise(0)
-    return out
-
-
 def simhash_relational(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc_id, simhash) via explode → codegen hash → 32 grouped bit-sums.
 
-    Same values as :func:`simhash32` (which re-inlines the interpreted md5
-    transform 32×); this shape hashes each token once and reduces with one
-    partial+final hash aggregate — the scale path.
+    Bit j is 1 iff more than half the token hashes have bit j set (strict
+    majority). Each token is hashed once in a codegen projection and the
+    bits reduce with one partial+final hash aggregate — the scale path.
     """
-    from ..functions.text import tokens
-
     ex = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("tok")
     )
-    hx = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint") % HASH_PRIME
-    ).alias("hx")
-    hashed = ex.select("doc_id", hx)
+    hashed = ex.select(
+        "doc_id", (portable_hash32("tok") % HASH_PRIME).alias("hx")
+    )
     aggs = [F.count(F.lit(1)).alias("n")] + [
         F.sum(F.shiftright("hx", j).bitwiseAND(F.lit(1))).alias(f"o_{j}")
         for j in range(SIMHASH_BITS)
@@ -627,8 +568,9 @@ def simhash_relational(docs: DataFrame, text_col: str, id_col: str) -> DataFrame
 
 
 def simhash32_sql(hv_col: str = "hv") -> str:
-    """DuckDB twin of :func:`simhash32`, over a column already holding the
-    hashed token list (materialize ``hashed_list_sql`` in a prior CTE)."""
+    """DuckDB twin of :func:`simhash_relational`, over a column already
+    holding the hashed token list (materialize ``hashed_list_sql`` in a
+    prior CTE)."""
     return " + ".join(
         f"(CASE WHEN 2 * list_sum(list_transform({hv_col}, x -> (x >> {j}) & 1)) "
         f"> len({hv_col}) THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
@@ -683,12 +625,3 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
     )
 
-
-def _md5_int32(s: str) -> int:
-    """Python twin of the portable hash — for inlining literal constants.
-    Delegates to the ONE shared implementation (functions/compat), which
-    the three-way hypothesis parity test pins to the Spark and DuckDB
-    variants."""
-    from ..functions.compat import portable_hash32_py
-
-    return portable_hash32_py(s)

@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .ivf import IVF_ITERS, _sq_l2, ivf_chain, ivf_index
+from ..functions.vectors import sq_l2
+from .ivf import IVF_ITERS, ivf_chain, ivf_index
 from .similarity import EMBED_DIM as DIM
 
 IMI_HALF_DIM = DIM // 2
@@ -110,7 +111,7 @@ def _half_probes(
         "query_id", F.slice("qv", off, IMI_HALF_DIM).alias("hq")
     )
     qc = hq.crossJoin(F.broadcast(centroids)).select(
-        "query_id", _sq_l2("hq", "c").alias("dist"), "cluster"
+        "query_id", sq_l2("hq", "c").alias("dist"), "cluster"
     )
     return (
         qc.groupBy("query_id")

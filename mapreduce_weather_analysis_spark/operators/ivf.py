@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..functions.vectors import sq_l2, sq_l2_sql
 from .similarity import EMBED_DIM as DIM
 
 IVF_K_FLOOR = 8
@@ -46,16 +47,6 @@ def ivf_cells(n: int) -> int:
     return max(IVF_K_FLOOR, int(math.floor(math.sqrt(n))))
 
 
-def _sq_l2(v: str | F.Column, c: str | F.Column) -> F.Column:
-    vv = F.col(v) if isinstance(v, str) else v
-    cc = F.col(c) if isinstance(c, str) else c
-    return F.aggregate(
-        F.zip_with(vv, cc, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-
-
 def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, v, cluster) — nearest centroid by squared L2, ties → lowest
     cluster id.
@@ -66,7 +57,7 @@ def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     the 100× run). The kernel broadcasts the k×DIM centroid matrix (≤ a few
     hundred KB) inside the closure and accumulates squared diffs
     DIMENSION-SEQUENTIALLY — ``acc += (x_d − c_d)²`` for d = 0..DIM−1 —
-    which is the exact IEEE op order of the _sq_l2 fold and of the oracle's
+    which is the exact IEEE op order of the sq_l2 fold and of the oracle's
     list_sum(list_transform(...)), so distances are bit-identical and
     np.argmin's first-minimum rule reproduces the (dist, cluster)
     tie-break. Zero shuffle: one narrow map over the corpus."""
@@ -218,7 +209,7 @@ def ivf_probes(
     # driver box (r15 verdict: q_ann_ivf_topk ×0.61, q_ann_sq8_topk
     # ×0.47) — the r15 rows-per-plan rule applies and this side of it
     qc = queries.crossJoin(F.broadcast(centroids)).select(
-        "query_id", _sq_l2("qv", "c").alias("dist"), "cluster"
+        "query_id", sq_l2("qv", "c").alias("dist"), "cluster"
     )
     return (
         qc.groupBy("query_id")
@@ -282,13 +273,6 @@ def ivf_topk(
 
 
 # --- DuckDB oracle twin ------------------------------------------------------
-
-
-def _sq_l2_sql(v: str, c: str, dim: int = DIM) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {dim} + 1), "
-        f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])))"
-    )
 
 
 def ivf_chain(
@@ -371,7 +355,7 @@ def ivf_chain(
                 SELECT {train}.vec_id, {train}.v, {prev}.cluster,
                        ROW_NUMBER() OVER (
                          PARTITION BY {train}.vec_id
-                         ORDER BY {_sq_l2_sql(f'{train}.v', f'{prev}.c', dim)}, {prev}.cluster
+                         ORDER BY {sq_l2_sql(f'{train}.v', f'{prev}.c', dim)}, {prev}.cluster
                        ) AS rn
                 FROM {train}, {prev}
               ) WHERE rn = 1
@@ -406,7 +390,7 @@ def ivf_chain(
             SELECT {P}vecs.vec_id, {P}vecs.v, {prev}.cluster,
                    ROW_NUMBER() OVER (
                      PARTITION BY {P}vecs.vec_id
-                     ORDER BY {_sq_l2_sql(f'{P}vecs.v', f'{prev}.c', dim)}, {prev}.cluster
+                     ORDER BY {sq_l2_sql(f'{P}vecs.v', f'{prev}.c', dim)}, {prev}.cluster
                    ) AS rn
             FROM {P}vecs, {prev}
           ) WHERE rn = 1
@@ -421,7 +405,7 @@ def ivf_chain(
             SELECT {P}q.query_id, {P}q.qv, {prev}.cluster,
                    ROW_NUMBER() OVER (
                      PARTITION BY {P}q.query_id
-                     ORDER BY {_sq_l2_sql(f'{P}q.qv', f'{prev}.c', dim)}, {prev}.cluster
+                     ORDER BY {sq_l2_sql(f'{P}q.qv', f'{prev}.c', dim)}, {prev}.cluster
                    ) AS rn
             FROM {P}q, {prev}
           ) WHERE rn <= {nprobe}

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from .ivf import IVF_ITERS, IVF_NPROBE, ivf_chain, ivf_index, ivf_probes
-from ..functions.vectors import sq_l2_unrolled
+from ..functions.vectors import sq_l2_sql, sq_l2_unrolled
 from .pq import PQ_ITERS, PQ_K, PQ_SUBDIM, _subvectors, pq_chain, pq_index
 
 
@@ -242,7 +242,7 @@ def ivfpq_residual_topk_sql(
     per-(query, cell) residual LUT join. (The PQ chain's raw-query LUT
     CTEs go unreferenced and are pruned by the planner.)"""
     from .ivf import DIM
-    from .pq import PQ_M, PQ_SUBDIM, _sq_l2_sql
+    from .pq import PQ_M, PQ_SUBDIM
 
     cent = f"i_c{ivf_iters}"  # the IVF chain's final centroid relation
     cbook = f"p_c{pq_iters}"  # the PQ chain's final codebook relation
@@ -285,7 +285,7 @@ def ivfpq_residual_topk_sql(
     ctes.append(
         f"""rlut AS (
           SELECT query_id, cluster, cb.m, cb.code,
-                 {_sq_l2_sql('qrsub.v', 'cb.c', d)} AS dd
+                 {sq_l2_sql('qrsub.v', 'cb.c', d)} AS dd
           FROM qrsub JOIN {cbook} cb ON qrsub.m = cb.m
         )"""
     )

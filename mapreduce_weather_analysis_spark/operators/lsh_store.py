@@ -60,9 +60,11 @@ def lsh_index_path(sf_dir: str) -> str:
 
 def lsh_write(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
     """Sign the corpus once and persist band buckets + verification
-    payload. Marker-idempotent; the build is the codegen relational
-    signature path (hash each shingle once, partial+final MIN aggregate),
-    never the interpreted higher-order-array form."""
+    payload. Marker-idempotent. Signatures come from the zero-shuffle
+    Arrow ``mapInPandas`` kernel
+    (:func:`operators.dedup.minhash_signatures_kernel`: one map stage,
+    each shingle hashed once per task through its memo); the shingle
+    sets for verification keep the codegen window form."""
     path = lsh_index_path(sf_dir)
     marker = os.path.join(path, "_INDEX_COMPLETE")
     if os.path.exists(marker):

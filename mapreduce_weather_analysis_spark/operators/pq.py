@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.vectors import as_double, sq_l2_unrolled
+from ..functions.vectors import as_double, sq_l2_sql, sq_l2_unrolled
 from .similarity import EMBED_DIM
 
 PQ_M = 4  # subspaces
@@ -169,13 +169,6 @@ def pq_topk(
 # --- DuckDB oracle twin ------------------------------------------------------
 
 
-def _sq_l2_sql(v: str, c: str, dim: int) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {dim} + 1), "
-        f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])))"
-    )
-
-
 def pq_chain(
     table: str,
     query_filter: str,
@@ -226,7 +219,7 @@ def pq_chain(
                 SELECT {P}sub.vec_id, {P}sub.m, {P}sub.v, {prev}.code,
                        ROW_NUMBER() OVER (
                          PARTITION BY {P}sub.vec_id, {P}sub.m
-                         ORDER BY {_sq_l2_sql(f'{P}sub.v', f'{prev}.c', d)}, {prev}.code
+                         ORDER BY {sq_l2_sql(f'{P}sub.v', f'{prev}.c', d)}, {prev}.code
                        ) AS rn
                 FROM {P}sub JOIN {prev} ON {P}sub.m = {prev}.m
               ) WHERE rn = 1
@@ -261,7 +254,7 @@ def pq_chain(
             SELECT {P}sub.vec_id, {P}sub.m, {prev}.code,
                    ROW_NUMBER() OVER (
                      PARTITION BY {P}sub.vec_id, {P}sub.m
-                     ORDER BY {_sq_l2_sql(f'{P}sub.v', f'{prev}.c', d)}, {prev}.code
+                     ORDER BY {sq_l2_sql(f'{P}sub.v', f'{prev}.c', d)}, {prev}.code
                    ) AS rn
             FROM {P}sub JOIN {prev} ON {P}sub.m = {prev}.m
           ) WHERE rn = 1
@@ -276,7 +269,7 @@ def pq_chain(
     ctes.append(
         f"""{P}lut AS (
           SELECT query_id, {prev}.m, {prev}.code,
-                 {_sq_l2_sql(f'{P}qsub.v', f'{prev}.c', d)} AS dd
+                 {sq_l2_sql(f'{P}qsub.v', f'{prev}.c', d)} AS dd
           FROM {P}qsub JOIN {prev} ON {P}qsub.m = {prev}.m
         )"""
     )

@@ -1121,8 +1121,8 @@ q_hybrid_search_rrf.__doc__ = q_hybrid_search_rrf.__doc__.format(
 
 
 def _hybrid_persisted_oracle() -> str:
-    from ..functions.vectors import cosine_sql
-    from ..operators.ivf import IVF_ITERS, IVF_NPROBE, _sq_l2_sql, ivf_chain
+    from ..functions.vectors import cosine_sql, sq_l2_sql
+    from ..operators.ivf import DIM, IVF_ITERS, IVF_NPROBE, ivf_chain
 
     qv = _query_vector()
     qlist = ", ".join(str(float(qv.get(i, 0))) for i in range(_FEAT_DIM))
@@ -1144,7 +1144,7 @@ def _hybrid_persisted_oracle() -> str:
       SELECT cluster FROM (
         SELECT {cent}.cluster,
                ROW_NUMBER() OVER (
-                 ORDER BY {_sq_l2_sql('qlit.qv', f'{cent}.c')}, {cent}.cluster
+                 ORDER BY {sq_l2_sql('qlit.qv', f'{cent}.c', DIM)}, {cent}.cluster
                ) AS rn
         FROM qlit, {cent}
       ) WHERE rn <= {IVF_NPROBE}
@@ -1784,8 +1784,9 @@ _CADD_OFFSET = 1_000_000  # fresh doc ids for the synthesized batch
 
 
 def _chunk_add_oracle() -> str:
+    from ..functions.vectors import sq_l2_sql
     from ..operators.ann_store import CHUNK_KEY_RADIX
-    from ..operators.ivf import IVF_ITERS, _sq_l2_sql
+    from ..operators.ivf import DIM, IVF_ITERS
     from .text_suite import _chunk_sql
 
     R = CHUNK_KEY_RADIX
@@ -1824,7 +1825,7 @@ def _chunk_add_oracle() -> str:
       SELECT nvec.vec_id, {cN}.cluster,
              ROW_NUMBER() OVER (
                PARTITION BY nvec.vec_id
-               ORDER BY {_sq_l2_sql('nvec.v', f'{cN}.c')}, {cN}.cluster
+               ORDER BY {sq_l2_sql('nvec.v', f'{cN}.c', DIM)}, {cN}.cluster
              ) AS rn
       FROM nvec, {cN}
     ) WHERE rn = 1
@@ -1867,7 +1868,7 @@ def q_chunk_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     nvecs = _chunk_vecs(chunk_relation(newdocs))
     # nearest-frozen-centroid assignment via the shared IVF Arrow kernel
     # (r16): the old |new chunks| x k crossJoin evaluated ~226k
-    # interpreted _sq_l2 folds then ranked them under a window — ~2.4 s
+    # interpreted sq_l2 folds then ranked them under a window — ~2.4 s
     # of the query's 2.9 s wall at sf0.1. _assign computes the same
     # distances dimension-sequentially (bit-identical IEEE op order to
     # the fold and the oracle's list_sum chain) and np.argmin's

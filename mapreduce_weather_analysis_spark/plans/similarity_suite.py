@@ -22,6 +22,8 @@ from ..functions.vectors import (
     cosine,
     cosine_sql,
     cosine_unrolled,
+    sq_l2,
+    sq_l2_sql,
     sq_l2_unrolled,
 )
 from ..operators.similarity import EMBED_DIM as _VDIM
@@ -2071,7 +2073,7 @@ _ADD_ID_OFFSET = 10_000_000
 
 
 def _index_add_oracle() -> str:
-    from ..operators.ivf import DIM, IVF_ITERS, _sq_l2_sql, ivf_chain
+    from ..operators.ivf import DIM, IVF_ITERS, ivf_chain
 
     ctes = ivf_chain("embeddings", _QUERY_FILTER, materialize=True)
     cN = f"c{IVF_ITERS}"
@@ -2096,7 +2098,7 @@ def _index_add_oracle() -> str:
       SELECT nv2.new_id, {cN}.cluster,
              ROW_NUMBER() OVER (
                PARTITION BY nv2.new_id
-               ORDER BY {_sq_l2_sql('nv2.v', f'{cN}.c')}, {cN}.cluster
+               ORDER BY {sq_l2_sql('nv2.v', f'{cN}.c', DIM)}, {cN}.cluster
              ) AS rn
       FROM nv2, {cN}
     ) WHERE rn = 1
@@ -2128,8 +2130,6 @@ def q_ann_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = ivfpq_write(spark, sf_dir)
 
-    from ..operators.ivf import _sq_l2
-
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
     e = t(spark, sf_dir, "embeddings")
     vv = F.col("embedding").cast("array<double>")
@@ -2141,7 +2141,7 @@ def q_ann_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v"),
     )
     qc = nv.crossJoin(F.broadcast(centroids)).select(
-        "new_id", "cluster", _sq_l2("v", "c").alias("dist")
+        "new_id", "cluster", sq_l2("v", "c").alias("dist")
     )
     w = W.partitionBy("new_id").orderBy(F.asc("dist"), F.asc("cluster"))
     return (
@@ -4831,14 +4831,12 @@ _KCTR_K = 4  # selected centers (unrolled rounds)
 
 
 def _kcenter_oracle() -> str:
-    from ..operators.ivf import _sq_l2_sql
-
     ctes = [
         "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
         " FROM embeddings)",
         "c1 AS (SELECT vec_id, v FROM ev ORDER BY vec_id LIMIT 1)",
         f"""d1 AS (
-      SELECT e.vec_id, {_sq_l2_sql('e.v', 'c.v')} AS mind
+      SELECT e.vec_id, {sq_l2_sql('e.v', 'c.v', _VDIM)} AS mind
       FROM ev e, c1 c
     )""",
     ]
@@ -4855,7 +4853,7 @@ def _kcenter_oracle() -> str:
         if r < _KCTR_K:
             ctes.append(
                 f"""d{r} AS (
-      SELECT d.vec_id, LEAST(d.mind, {_sq_l2_sql('e.v', 'c.v')}) AS mind
+      SELECT d.vec_id, LEAST(d.mind, {sq_l2_sql('e.v', 'c.v', _VDIM)}) AS mind
       FROM d{r - 1} d JOIN ev e ON e.vec_id = d.vec_id, c{r} c
     )"""
             )
@@ -4888,8 +4886,6 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls all {K} picks with scalar-subquery argmaxes —
     identical LEAST/distance arithmetic, ties to the lower id."""
 
-    from ..operators.ivf import _sq_l2
-
     ev = t(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
@@ -4897,7 +4893,7 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks = [(1, int(first["vec_id"]), 0.0)]
     center_vec = F.array(*[F.lit(float(x)) for x in first["v"]])
     mind = ev.select(
-        "vec_id", "v", _sq_l2(F.col("v"), center_vec).alias("mind")
+        "vec_id", "v", sq_l2(F.col("v"), center_vec).alias("mind")
     ).localCheckpoint(eager=False)
     for r in range(2, _KCTR_K + 1):
         top = mind.agg(
@@ -4912,7 +4908,7 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             mind = mind.select(
                 "vec_id",
                 "v",
-                F.least(F.col("mind"), _sq_l2(F.col("v"), cvec)).alias(
+                F.least(F.col("mind"), sq_l2(F.col("v"), cvec)).alias(
                     "mind"
                 ),
             ).localCheckpoint(eager=False)

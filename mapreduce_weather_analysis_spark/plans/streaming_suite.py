@@ -441,89 +441,27 @@ def _minhash_sig_sql() -> str:
 @register("q_stream_minhash_ledger", scale_tier="scale", oracle=_minhash_sig_sql())
 def q_stream_minhash_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-signature dedup ledger AS A STREAM: the MinHash signature
-    (the same 16-perm single-expression form the batch dedup suite uses)
     computed on a live document feed, keyed into a stateful aggregation —
     per content signature, the first doc_id seen and the duplicate count.
     This is the streaming half of incremental corpus dedup: the ledger IS
     the standing state an ingestion pipeline checks new batches against.
 
-    The signature map is stateless per row (one Arrow map stage over
-    JVM-tokenized rows); state is one row per DISTINCT
+    The signature map is the batch dedup chain's own Arrow kernel,
+    :func:`operators.dedup.minhash_signatures_kernel` (its docstring
+    carries the exactness argument), applied to the stream: stateless
+    per row, one map stage. The ledger key is joined JVM-side from the
+    bigint signature (Long.toString == str(int), so the key strings
+    match the oracle's array_to_string). State is one row per DISTINCT
     signature (bounded by corpus diversity, not stream length). Drained
     availableNow in complete mode; the batch twin is the plain
     group-by-signature oracle, exact because signature arithmetic is
-    integer end-to-end.
-
-    Per-batch compute posture (VERDICT r13 ask #5 measured in r14,
-    re-decomposed round 15): the 16-permutation arithmetic is NOT the
-    wall — after the r14 has_min_tokens fix removed the interpreted
-    FilterExec, the remaining drain sat in the interpreted HOF
-    transform/slice shingle CONSTRUCTION plus the per-element md5
-    lambda. The signature map now runs as ONE Arrow mapInPandas stage:
-    tokenization stays JVM-side (the engine-pinned lower/trim/WS_CLASS
-    split), the kernel joins the distinct n-gram shingles (exact string
-    equality with concat_ws over slice), hashes each once via hashlib
-    md5 — portable_hash32_py, the pinned third twin of the JVM/DuckDB
-    hash — memoized across the batch, and folds the 16 permutations as
-    one vectorized int64 (hx·a+b) mod P argmin (products < 2⁶² — exact,
-    identical to the JVM's bigint arithmetic; Long.toString == str(int)
-    for the joined signature). The stateful ledger agg is unchanged."""
-    from ..functions.compat import HASH_PRIME
-    from ..functions.text import has_min_tokens, tokens
-    from ..operators.dedup import MINHASH_PERMS, SHINGLE_N
-
-    perm_a = [a for a, _ in MINHASH_PERMS]
-    perm_b = [b for _, b in MINHASH_PERMS]
-
-    def sig_batches(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        n = SHINGLE_N
-        pa = np.asarray(perm_a, dtype=np.int64)
-        pb = np.asarray(perm_b, dtype=np.int64)
-        hx_of: dict[str, int] = {}
-
-        def hx(s: str) -> int:
-            v = hx_of.get(s)
-            if v is None:
-                v = (
-                    int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                    % HASH_PRIME
-                )
-                hx_of[s] = v
-            return v
-
-        for pdf in batches:
-            ids: list[int] = []
-            sigs: list[str] = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["toks"]):
-                if toks is None or len(toks) < n:
-                    continue
-                hv = np.fromiter(
-                    {
-                        hx(" ".join(toks[i : i + n]))
-                        for i in range(len(toks) - n + 1)
-                    },
-                    dtype=np.int64,
-                )
-                mins = (hv[:, None] * pa[None, :] + pb[None, :]) % HASH_PRIME
-                ids.append(int(doc_id))
-                sigs.append(",".join(str(int(v)) for v in mins.min(axis=0)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "content_sig": pd.Series(sigs, dtype="object"),
-                }
-            )
+    integer end-to-end."""
+    from ..operators.dedup import minhash_signatures_kernel
 
     docs = read_documents_stream(spark, sf_dir)
-    sig = (
-        docs.where(has_min_tokens("text", SHINGLE_N))
-        .select("doc_id", tokens("text").alias("toks"))
-        .mapInPandas(sig_batches, "doc_id bigint, content_sig string")
+    sig = minhash_signatures_kernel(docs, "text", "doc_id").select(
+        "doc_id",
+        F.concat_ws(",", F.col("sig").cast("array<string>")).alias("content_sig"),
     )
     ledger = sig.groupBy("content_sig").agg(
         F.min("doc_id").alias("first_doc"),
@@ -904,7 +842,8 @@ _SIA_FILTER_REM = 11  # the "arriving batch": vec_id % 20 = 11
 
 
 def _stream_index_add_oracle() -> str:
-    from ..operators.ivf import IVF_ITERS, _sq_l2_sql, ivf_chain
+    from ..functions.vectors import sq_l2_sql
+    from ..operators.ivf import DIM, IVF_ITERS, ivf_chain
 
     ctes = ivf_chain("embeddings", "TRUE")
     cn = f"c{IVF_ITERS}"
@@ -923,7 +862,7 @@ def _stream_index_add_oracle() -> str:
       SELECT nb.vec_id, {cn}.cluster,
              ROW_NUMBER() OVER (
                PARTITION BY nb.vec_id
-               ORDER BY {_sq_l2_sql('nb.v', f'{cn}.c')}, {cn}.cluster
+               ORDER BY {sq_l2_sql('nb.v', f'{cn}.c', DIM)}, {cn}.cluster
              ) AS rn
       FROM nb, {cn}
     ) WHERE rn = 1
@@ -954,8 +893,8 @@ def q_stream_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     and argmin-assigns the same arriving batch."""
     import os
 
+    from ..functions.vectors import sq_l2
     from ..operators.ann_store import ivfpq_write
-    from ..operators.ivf import _sq_l2
 
     path = ivfpq_write(spark, sf_dir)
     cents = sorted(
@@ -985,7 +924,7 @@ def q_stream_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = F.transform(
         arr,
         lambda s: F.struct(
-            _sq_l2(s["c"], F.col("v")).alias("dist"),
+            sq_l2(s["c"], F.col("v")).alias("dist"),
             s["cluster"].alias("cluster"),
         ),
     )
@@ -1141,9 +1080,9 @@ def q_stream_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    from ..functions.vectors import cosine
+    from ..functions.vectors import cosine, sq_l2
     from ..operators.ann_store import ivfpq_write
-    from ..operators.ivf import IVF_NPROBE, _sq_l2
+    from ..operators.ivf import IVF_NPROBE
 
     path = ivfpq_write(spark, sf_dir)
     cents = sorted(
@@ -1162,7 +1101,7 @@ def q_stream_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_cells = F.transform(
         arr,
         lambda s: F.struct(
-            _sq_l2(s["c"], F.col("qv")).alias("dist"),
+            sq_l2(s["c"], F.col("qv")).alias("dist"),
             s["cluster"].alias("cluster"),
         ),
     )

@@ -16,6 +16,8 @@ from ..functions.compat import (
     bounded_rank_window,
     dround,
     dround_sql,
+    portable_hash32,
+    portable_hash32_sql,
     psum,
     psum_sql,
 )
@@ -323,7 +325,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, source,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+             {portable_hash32_sql('CAST(doc_id AS VARCHAR)')}
                % 100 AS bucket
       FROM documents
     )
@@ -344,10 +346,7 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     any cluster size (unlike seeded RNG sampling, which is partitioning-
     dependent). Emits the split distribution."""
     d = t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = portable_hash32(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -377,7 +376,7 @@ SAMPLE_RATES = [(f"src{i}", 30 if i < 10 else 70) for i in range(20)]
     SELECT d.doc_id, d.source, d.lang, r.rate
     FROM documents d
     JOIN rates r ON r.source = d.source
-    WHERE CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+    WHERE {portable_hash32_sql('CAST(d.doc_id AS VARCHAR)')}
             % 100 < r.rate
     """,
 )
@@ -391,10 +390,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     only distributed work, so this runs at full scan speed at 100 TB."""
     d = t(spark, sf_dir, "documents")
     rates = F.broadcast(spark.createDataFrame(SAMPLE_RATES, ["source", "rate"]))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = portable_hash32(F.col("doc_id").cast("string")) % 100
     return (
         d.join(rates, "source")
         .where(bucket < F.col("rate"))
@@ -719,8 +715,7 @@ _SHUFFLE_SHARDS = 8
     oracle=f"""
     WITH h AS (
       SELECT doc_id,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % {HASH_PRIME} AS hv
+             {portable_hash32_sql('CAST(doc_id AS VARCHAR)')} % {HASH_PRIME} AS hv
       FROM documents
     )
     SELECT doc_id,
@@ -742,11 +737,7 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = t(spark, sf_dir, "documents")
-    hv = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % HASH_PRIME
-    )
+    hv = portable_hash32(F.col("doc_id").cast("string")) % HASH_PRIME
     h = d.select("doc_id", hv.alias("hv"))
     shard = (F.col("hv") % _SHUFFLE_SHARDS).cast("int")
     w = W.partitionBy(F.col("hv") % _SHUFFLE_SHARDS).orderBy("hv", "doc_id")
@@ -767,8 +758,7 @@ _QUOTA_PER_SOURCE = 20  # max docs kept per source (the per-domain cap)
       SELECT doc_id, source, n_chars,
              CAST(ROW_NUMBER() OVER (
                PARTITION BY source
-               ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                             AS BIGINT), doc_id
+               ORDER BY {portable_hash32_sql('CAST(doc_id AS VARCHAR)')}, doc_id
              ) AS INTEGER) AS rk
       FROM documents
     )
@@ -791,10 +781,7 @@ def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = t(spark, sf_dir, "documents")
-    hv = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-    )
+    hv = portable_hash32(F.col("doc_id").cast("string"))
     w = W.partitionBy("source").orderBy(hv.asc(), F.col("doc_id").asc())
     return (
         d.select("doc_id", "source", "n_chars")
@@ -948,8 +935,7 @@ _TOKEN_BUDGET = 2000  # per-source token budget (the mixture's hard cap)
     oracle=f"""
     WITH tl AS (
       SELECT doc_id, source, len({tokens_sql('text')}) AS n_tokens,
-             CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) AS hv
+             {portable_hash32_sql('CAST(doc_id AS VARCHAR)')} AS hv
       FROM documents
     ),
     run AS (
@@ -979,10 +965,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = t(spark, sf_dir, "documents")
-    hv = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-    )
+    hv = portable_hash32(F.col("doc_id").cast("string"))
     tl = d.select(
         "doc_id", "source", F.size(tokens("text")).alias("n_tokens"), hv.alias("hv")
     )
@@ -2198,8 +2181,6 @@ _DSIR_B = 256  # hashed-feature buckets (DSIR uses 10k; scaled to fixture)
 
 
 def _dsir_oracle() -> str:
-    from ..functions.compat import dround_sql, portable_hash32_sql, psum_sql
-
     lr = dround_sql(
         f"ln((COALESCE(ct, 0) + 1.0) / (nt + {_DSIR_B}.0)) - "
         f"ln((cr + 1.0) / (nr + {_DSIR_B}.0))",
@@ -2252,8 +2233,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine determinism: per-bucket log-ratios go through the
     shortest-repr decimal round (dround, ulp-drift-proof) and the
     per-doc sum through psum's exact decimal accumulation."""
-    from ..functions.compat import dround, portable_hash32, psum
-
     d = t(spark, sf_dir, "documents")
     f = d.select(
         "doc_id",
@@ -2637,12 +2616,6 @@ _DS_N = 25  # resampled corpus size
 
 
 def _dsir_sample_oracle() -> str:
-    from ..functions.compat import (
-        HASH_PRIME,
-        dround_sql,
-        portable_hash32_sql,
-    )
-
     h = portable_hash32_sql("concat('dsir', CAST(doc_id AS VARCHAR))")
     u = f"({h} % {HASH_PRIME} + 1) / ({HASH_PRIME} + 1.0)"
     key = dround_sql(f"logw - ln(-ln({u}))", 8)
@@ -2675,8 +2648,6 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: q_dsir_weights' two corpus passes + one key projection
     and a TakeOrdered top-{N} — the rank never sorts the corpus. The
     trailing rank column is a bounded {N}-row window."""
-    from ..functions.compat import HASH_PRIME, dround, portable_hash32
-
     w = q_dsir_weights(spark, sf_dir)
     u = (
         portable_hash32(F.concat(F.lit("dsir"), F.col("doc_id").cast("string")))
@@ -3192,8 +3163,6 @@ _SB_ALPHA = "0.4"  # Brants et al.'s fixed backoff penalty
 
 
 def _sb_oracle() -> str:
-    from ..functions.compat import dround_sql, portable_hash32_sql, psum_sql
-
     a = _SB_ALPHA
     score = (
         "CASE WHEN c3.c3 IS NOT NULL THEN c3.c3 * 1.0 / bctx.b2 "
@@ -3281,8 +3250,6 @@ def q_stupid_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick) — never a corpus-sized broadcast. nv is a 1-row global agg,
     broadcast by construction. Determinism: per-trigram ln() rounded to
     8 decimals (the q_lm_quality precedent), per-doc mean via psum."""
-    from ..functions.compat import dround, portable_hash32, psum
-
     from pyspark.sql import Window as W
 
     d = t(spark, sf_dir, "documents").select(

@@ -2249,9 +2249,9 @@ def test_sq_l2_unrolled_bit_identical_to_fold(spark):
     from pyspark.sql import functions as F2
 
     from mapreduce_weather_analysis_spark.functions.vectors import (
+        sq_l2,
         sq_l2_unrolled,
     )
-    from mapreduce_weather_analysis_spark.operators.ivf import _sq_l2
 
     e = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     pairs = e.select(
@@ -2264,9 +2264,9 @@ def test_sq_l2_unrolled_bit_identical_to_fold(spark):
         )
     )
     both = pairs.select(
-        _sq_l2(F2.col("a"), F2.col("b")).alias("fold64"),
+        sq_l2(F2.col("a"), F2.col("b")).alias("fold64"),
         sq_l2_unrolled(F2.col("a"), F2.col("b"), 64).alias("flat64"),
-        _sq_l2(F2.slice("a", 1, 16), F2.slice("b", 1, 16)).alias("fold16"),
+        sq_l2(F2.slice("a", 1, 16), F2.slice("b", 1, 16)).alias("fold16"),
         sq_l2_unrolled(
             F2.slice("a", 1, 16), F2.slice("b", 1, 16), 16
         ).alias("flat16"),
@@ -2341,29 +2341,140 @@ def test_y4m_c420_encoder_roundtrip():
         assert len(blob) == 35 + nf * 102
 
 
+def _minhash_signatures_relational(exd, k):
+    """Reference twin of operators.dedup.minhash_signatures_kernel:
+    (doc_id, sig, n_sh) from distinct (doc_id, s) shingle rows — codegen
+    portable hash, then one grouped per-permutation MIN. Three exchanges
+    for per-document work, which is why the package runs the kernel."""
+    from mapreduce_weather_analysis_spark.functions.compat import (
+        HASH_PRIME,
+        portable_hash32,
+    )
+    from mapreduce_weather_analysis_spark.operators.dedup import minhash_perms
+
+    hashed = exd.select("doc_id", (portable_hash32("s") % HASH_PRIME).alias("hx"))
+    aggs = [
+        F.min((F.col("hx") * a + b) % HASH_PRIME).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(minhash_perms(k))
+    ] + [F.count(F.lit(1)).alias("n_sh")]
+    return (
+        hashed.groupBy("doc_id")
+        .agg(*aggs)
+        .select(
+            "doc_id",
+            F.array(*[f"mh_{i}" for i in range(k)]).alias("sig"),
+            "n_sh",
+        )
+    )
+
+
 def test_minhash_signature_kernel_matches_relational(spark):
-    """The zero-shuffle Arrow signature kernel (r16) must reproduce the
-    relational shingle->hash->grouped-MIN chain row-for-row: same doc set
+    """The zero-shuffle Arrow signature kernel must reproduce the
+    relational shingle->hash->grouped-MIN twin row-for-row: same doc set
     (short docs dropped identically), same 16-perm signatures, same
-    distinct-shingle counts. This is the exactness contract that let the
-    batch LSH chain swap minhash_signatures_relational(shingle_rows(...))
-    for one mapInPandas stage."""
+    distinct-shingle counts — on the fixture corpus AND on hand-built
+    edge cases: NULL / empty / whitespace-only / under-SHINGLE_N text, a
+    shingle repeated inside one document (n_sh counts DISTINCT
+    shingles), documents sharing shingles inside ONE Arrow batch
+    (coalesce(1) — exercises the per-task hash memo), and an empty
+    input."""
     from mapreduce_weather_analysis_spark.operators.dedup import (
+        MINHASH_K,
+        SHINGLE_N,
         minhash_signatures_kernel,
-        minhash_signatures_relational,
         shingle_rows,
     )
     from mapreduce_weather_analysis_spark.plans.registry import t
 
-    d = t(spark, SMOKE_SF, "documents")
-    rel = {
-        r["doc_id"]: (list(r["sig"]), r["n_sh"])
-        for r in minhash_signatures_relational(
-            shingle_rows(d, "text", "doc_id")
-        ).collect()
-    }
-    ker = {
-        r["doc_id"]: (list(r["sig"]), r["n_sh"])
-        for r in minhash_signatures_kernel(d, "text", "doc_id").collect()
-    }
+    def both(d):
+        rel = {
+            r["doc_id"]: (list(r["sig"]), r["n_sh"])
+            for r in _minhash_signatures_relational(
+                shingle_rows(d, "text", "doc_id"), MINHASH_K
+            ).collect()
+        }
+        ker = {
+            r["doc_id"]: (list(r["sig"]), r["n_sh"])
+            for r in minhash_signatures_kernel(d, "text", "doc_id").collect()
+        }
+        return ker, rel
+
+    ker, rel = both(t(spark, SMOKE_SF, "documents"))
     assert ker == rel and len(ker) > 0
+
+    assert SHINGLE_N == 3  # the hand-built texts below are sized for n=3
+    rows = [
+        (0, None),
+        (1, ""),
+        (2, "   "),
+        (3, "two words"),
+        (4, "a b c a b c a b c"),  # 7 shingles, 3 distinct
+        (5, "The quick brown fox jumps over the lazy dog"),
+        (6, "the QUICK brown\tfox jumps  over a lazy cat"),  # shares with 5
+        (7, "quick brown fox jumps"),  # every shingle also in 5 and 6
+        (8, "exactly three tokens"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1)
+    ker, rel = both(docs)
+    assert ker == rel
+    assert sorted(ker) == [4, 5, 6, 7, 8]
+    assert ker[4][1] == 3 and ker[8][1] == 1 and ker[7][1] == 2
+    # doc 7's shingles are a subset of doc 5's, so each permutation's
+    # minimum over 7 can only be >= the minimum over 5
+    assert all(x >= y for x, y in zip(ker[7][0], ker[5][0]))
+
+    ker, rel = both(docs.limit(0))
+    assert ker == rel == {}
+
+
+def test_portable_primitives_have_one_definition():
+    """Source guard: the md5-prefix portable hash is spelled only in
+    functions/compat.py plus the two executor closures that must pickle
+    by value (dedup.minhash_signatures_kernel's sig_batches, the
+    streaming bloom probe_batches); the squared-L2 fold and its DuckDB
+    twin are defined only in functions/vectors.py. Everything else calls
+    those definitions, so an exactness argument has one copy."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "mapreduce_weather_analysis_spark"
+    md5_prefix = re.compile(
+        r"F\.md5\(|substr\(md5\(|hexdigest\(\)\[:8\],\s*16"
+    )
+    sq_l2_fold = re.compile(
+        r"lambda (\w+), (\w+): \(\1 - \2\) \* \(\1 - \2\)"
+        r"|\(([\w.{}']+)\[i\] - ([\w.{}']+)\[i\]\) \* \(\3\[i\] - \4\[i\]\)"
+    )
+    by_value = {
+        "operators/dedup.py": {"minhash_signatures_kernel", "sig_batches"},
+        "plans/streaming_suite.py": {"probe_batches"},
+    }
+    stray_md5, stray_l2 = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        defs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        stray_l2 += [
+            f"{rel}:{n.lineno} def {n.name}"
+            for n in defs
+            if re.fullmatch(r"_?sq_l2(_sql)?", n.name)
+            and rel != "functions/vectors.py"
+        ]
+        for m in md5_prefix.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            scope = {n.name for n in defs if n.lineno <= line <= n.end_lineno}
+            allowed = by_value.get(rel)
+            if rel == "functions/compat.py" or (allowed and allowed <= scope):
+                continue
+            stray_md5.append(f"{rel}:{line}")
+        if rel != "functions/vectors.py":
+            for m in sq_l2_fold.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                stray_l2.append(f"{rel}:{line}")
+    assert not stray_md5, f"inline md5-prefix hash outside compat: {stray_md5}"
+    assert not stray_l2, f"squared-L2 fold outside functions/vectors: {stray_l2}"
