@@ -8,9 +8,8 @@ trick behind Delta/Databricks OPTIMIZE ZORDER and every space-filling-
 curve index, expressed here as pure JVM bit arithmetic (shift/mask — no
 UDF, fuses into codegen).
 
-The experiment harness (`scripts/zorder_experiment.py`) measures the
-row-group skip fraction and scan wall on flat vs linear-sorted vs
-z-ordered layouts; SCALE.md records the numbers.
+SCALE.md records the measured row-group skip fraction and scan wall on
+flat vs linear-sorted vs z-ordered layouts.
 """
 
 from __future__ import annotations

@@ -13,8 +13,10 @@ weaker rows-only check.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,450 +123,29 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# Driver-facing emission order. The correctness driver verifies registry
-# entries front-to-back with a bounded budget (_WINDOW slots), so the
-# concatenation order below is load-bearing. Sections are named by the
-# round of their last driver-green row and concatenated stalest-feature-
-# first: never-certified names lead, then re-certification candidates
-# stalest-first, freshest greens last. The window boundary is implicit
-# (the driver takes the first _WINDOW names); a guard test asserts the
-# never-certified sections fit inside it and that every registered name
-# appears exactly once (VERDICT r7 asks #2/#10).
-_WINDOW = 50
+# Driver-facing emission order. The correctness driver verifies the first
+# names of queries() each round, so the stalest checks lead: names never
+# hash-matched first, then the oldest last-green round first, ties in
+# registration order. The rounds come from the CORRECTNESS_r*.json rows
+# the driver writes at the repo root.
+_ROOT = Path(__file__).resolve().parents[2]
 
-# NEVER driver-certified: the round-14 additions (the Y4M video codec
-# trio completing the real-decode modality story). They LEAD the
-# round-14 window for their first official rows.
-_R14_QUEUE: tuple[str, ...] = (
-    "q_multimodal_video_real",
-    "q_video_frame_sample_real",
-    "q_video_scene_dedup",
-    "q_video_frame_dedup",
-    "q_multimodal_video_c420",
-    "q_cross_modal_dedup",
-)
 
-# Re-certified in round 13 (the round-13 window's tail slots): the 7
-# then-stalest r8-dated greens. Parked with the fresh tail.
-_R8_RECERT_R13: tuple[str, ...] = (
-    "q_ann_imi_search",
-    "q_ann_sq8_topk",
-    "q_ann_matryoshka_rerank",
-    "q_ann_ivf_sq8_topk",
-    "q_ann_imi_sq8_search",
-    "q_ann_imi_rerank",
-    "q_decontaminate_bloom",
-)
-
-# Greens still dated round 8 — after the r13 window took the 7 heads
-# above, these 12 (+ the 31 in _R8_GREEN_B) are the oldest standing
-# driver checks (VERDICT r13 ask #1 named this exact 43-name backlog).
-# They follow the never-certified round-14 queue so CORRECTNESS_r14
-# retires the whole r8 backlog; nothing in the union stays older
-# than r9.
-_R8_GREEN_A: tuple[str, ...] = (
-    "q_stream_decontaminate",
-    "q_ann_imi_stats",
-    "q_hybrid_search_persisted",
-    "q_dup_span_removal",
-    "q_knn_join",
-    "q_quality_classifier",
-    "q_knn_graph_clusters",
-    "q_weighted_sample",
-    "q_knn_join_persisted",
-    "q_knn_join_imi",
-    "q_knn_refine",
-    "q_weighted_sample_stratified",
-)
-
-# Certified round 8 (first official rows): the round-8 graph/curation/
-# TPC-H-completion waves.
-_R8_GREEN_B: tuple[str, ...] = (
-    "q_knn_refine2",
-    "q_diverse_sample",
-    "q_knn_triangles",
-    "q_component_medoid",
-    "q_components_persisted",
-    "q_curation_gate",
-    "q_graph_profile",
-    "q_component_profile",
-    "q_kcore",
-    "q_curation_report",
-    "q_component_exemplars",
-    "q_bridge_edges",
-    "q_lp_communities",
-    "q_cross_source_pairs",
-    "q_ktruss",
-    "q_source_overlap_matrix",
-    "q_embedding_drift",
-    "q_parts_supplier_breadth",
-    "q_stream_embedding_drift",
-    "q_phash_dedup",
-    "q_mincost_supplier",
-    "q_important_parts",
-    "q_lateness_priority_split",
-    "q_dominant_supplier",
-    "q_containment_pairs",
-    "q_mmr_rerank",
-    "q_bm25_rm3",
-    "q_lexical_drift",
-    "q_ann_range_search",
-    "q_stream_lexical_drift",
-    "q_quality_calibration",
-)
-
-# Certified round 13 (first official rows): the round-13 additions.
-# Parked with the fresh tail.
-_R13_QUEUE: tuple[str, ...] = (
-    "q_multimodal_decode_real",
-    "q_dup_span_removal_hashed",
-    "q_multimodal_resize_real",
-    "q_multimodal_audio_real",
-    "q_audio_fingerprint_dedup",
-)
-
-# Certified round 12 (first official rows): the round-12 additions.
-# Parked with the fresh tail.
-_R12_QUEUE: tuple[str, ...] = (
-    "q_chunk_index_stats",
-    "q_serve_tiers_all",
-    "q_embed_neardup_celled",
-    "q_decontaminate_semantic",
-    "q_stream_decontaminate_semantic",
-)
-
-# Certified round 11 (first official rows): the round-11 additions,
-# all green in CORRECTNESS_r11 — parked with the fresh tail.
-_R11_QUEUE: tuple[str, ...] = (
-    "q_ann_serve_tiers",
-    "q_month_bucket_lenient",
-    "q_doc_chunks",
-    "q_chunk_dedup",
-    "q_stupid_backoff_lm",
-    "q_chunk_search",
-    "q_stream_chunk_ingest",
-    "q_dedup_lsh_persisted",
-    "q_chunk_index_add",
-)
-
-# Re-certified in round 10 (CORRECTNESS_r10 rows 1-7): the round-10
-# additions' first official greens.
-_R10_QUEUE: tuple[str, ...] = (
-    "q_components_incremental_persisted",
-    "q_ann_binary_rotated",
-    "q_ann_ivf_binary_rotated",
-    "q_ann_binary_rotated_search",
-    "q_ann_binary_recall_eval",
-    "q_bm25_search_merged",
-    "q_merge_upsert",
-)
-
-# Certified round 9 (first official rows): the round-8/9 tail — lexical
-# store, prefix-sum sharding, streaming monitors, PCA/ABTT, binary ANN,
-# CDC fold, incremental components. Parked with the fresh greens.
-_R9_GREEN: tuple[str, ...] = (
-    "q_token_shards",
-    "q_bm25_search",
-    "q_skew_profile",
-    "q_tokenizer_fertility",
-    "q_ann_index_delete",
-    "q_context_pack",
-    "q_epoch_plan",
-    "q_lang_confusion",
-    "q_graph_beam_search",
-    "q_stream_skew_profile",
-    "q_stream_index_add",
-    "q_stream_percolate",
-    "q_bm25_index_add",
-    "q_index_compaction",
-    "q_retrieval_eval",
-    "q_embed_pca",
-    "q_embed_anisotropy",
-    "q_dsir_sample",
-    "q_stream_ann_search",
-    "q_ann_search_compacted",
-    "q_textrank_keywords",
-    "q_pmi_pairs",
-    "q_abtt_search",
-    "q_kcenter_select",
-    "q_kanon_audit",
-    "q_ranker_agreement",
-    "q_calibration_bins",
-    "q_ks_drift",
-    "q_stream_ks_drift",
-    "q_corpus_to_shards",
-    "q_sim_histogram",
-    "q_recall_curve",
-    "q_source_outliers",
-    "q_cluster_terms",
-    # round-9 additions (never certified) append here, inside the window
-    "q_abtt_search_indexed",
-    "q_pr_curve",
-    "q_embed_pca2",
-    "q_ann_binary_hamming",
-    "q_cdc_apply",
-    "q_stream_bm25_search",
-    "q_late_interaction",
-    "q_adamic_adar",
-    "q_zipf_fit",
-    "q_ldiversity",
-    "q_ann_binary_search",
-    "q_ann_ivf_binary_search",
-    "q_components_incremental",
-)
-
-# Re-certified in round 9 (the window's 3 free slots beyond the new
-# queue took the then-stalest r3 heads) — freshest re-cert rows.
-_R9_RECERT: tuple[str, ...] = (
-    "q_ann_gemm_topk",
-    "q_ann_ivf_sampled",
-    "q_ann_ivf_topk",
-)
-
-# Re-certified in round 10 (CORRECTNESS_r10 rows 8-35): the formerly
-# r3-dated greens, all retired from the rotation backlog in one window.
-_R3_GREEN: tuple[str, ...] = (
-    "q_ann_pq_topk",
-    "q_big_orders",
-    "q_bpe_pair_counts",
-    "q_brand_revenue",
-    "q_corpus_clean",
-    "q_corpus_shuffle",
-    "q_corpus_stats",
-    "q_dedup_canonical",
-    "q_dedup_incremental",
-    "q_dedup_minhash_lsh",
-    "q_event_transitions",
-    "q_frame_sample",
-    "q_fuzzy_match",
-    "q_heavy_hitters",
-    "q_mixing_weights",
-    "q_multimodal_meta",
-    "q_nation_volume",
-    "q_pagerank_nations",
-    "q_prefilter_semi_join",
-    "q_promo_revenue",
-    "q_quota_sample",
-    "q_returned_items",
-    "q_salted_join",
-    "q_shipping_priority",
-    "q_simhash_pairs",
-    "q_text_repetition",
-    "q_token_budget",
-    "q_vocab_coverage",
-)
-
-# Re-certified in round 10 (CORRECTNESS_r10 rows 36-50): the 15
-# oldest r4-dated greens that fit the round-10 window.
-_R4_RECERT_R10: tuple[str, ...] = (
-    "q_agg_pricing_summary",
-    "q_ann_index_stats",
-    "q_ann_ivf_search",
-    "q_ann_ivfpq_rerank",
-    "q_ann_ivfpq_residual",
-    "q_ann_ivfpq_search",
-    "q_ann_ivfpq_topk",
-    "q_bpe_apply",
-    "q_bpe_train_merges",
-    "q_dedup_apply",
-    "q_dedup_exact",
-    "q_dedup_simhash",
-    "q_doc_fingerprint",
-    "q_dup_span_fraction",
-    "q_embed_quantize",
-)
-
-# Greens last certified in round 4 — the 24 remaining r4-dated rows;
-# they follow the flagships inside the round-11 window.
-_R4_GREEN: tuple[str, ...] = (
-    "q_encode_ids",
-    "q_events_funnel_sessionized",
-    "q_events_session_window",
-    "q_events_sessionize",
-    "q_join_left",
-    "q_ngram_jaccard",
-    "q_ngram_lm_counts",
-    "q_pack_sequences",
-    "q_pii_scrub",
-    "q_segment_dedup",
-    "q_semdedup",
-    "q_stream_dedup",
-    "q_stream_minhash_ledger",
-    "q_stream_session_window",
-    "q_stream_sliding",
-    "q_stream_stateful_counts",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_tumbling",
-    "q_tfidf_top_terms",
-    "q_token_count",
-    "q_udtf_chunk_text",
-    "q_window_running_sum",
-    "q_window_topk_per_group",
-)
-
-# The weather flagships — the reference's entire raison d'être,
-# re-certified in round 11 (VERDICT r10 ask #1). Parked fresh.
-_R5_FLAGSHIPS: tuple[str, ...] = (
-    "q_max_month",
-    "q_city_month",
-    "q_city_month_formatted",
-)
-
-# Re-certified in round 11 (the round-11 window's tail slots): the 14
-# then-stalest round-5 greens. Parked with the fresh tail.
-_R5_RECERT_R11: tuple[str, ...] = (
-    "q_scan_filter_project",
-    "q_join_inner",
-    "q_date_funcs",
-    "q_case_coalesce",
-    "q_topk_global",
-    "q_sql_api_shipping",
-    "q_multimodal_decode",
-    "q_approx_count_distinct",
-    "q_sketch_mergeable",
-    "q_sketch_quantiles",
-    "q_sketch_set_ops",
-    "q_approx_percentiles",
-    "q_segment_dedup_hashed",
-    "q_dup_span_fraction_hashed",
-)
-
-# Greens still dated round 5 — the 33 oldest driver checks in the
-# registry (VERDICT r11 ask #1 derived this exact list from the
-# CORRECTNESS_r*.json union). They follow the never-certified round-12
-# queue so CORRECTNESS_r12 retires the whole backlog in one window.
-_R5_STALE: tuple[str, ...] = (
-    "q_semdedup_persisted",
-    "q_dsir_weights",
-    "q_lm_quality",
-    "q_cust_order_distribution",
-    "q_top_supplier",
-    "q_small_qty_revenue",
-    "q_late_shipment_priority",
-    "q_solo_late_supplier",
-    "q_idle_customers",
-    "q_gopher_quality",
-    "q_ccnet_buckets",
-    "q_winnowing",
-    "q_hard_negatives",
-    "q_ann_recall_eval",
-    "q_ann_index_add",
-    "q_stream_quality_gate",
-    "q_table_profile",
-    "q_winnowing_pairs",
-    "q_doc_embed_hashed",
-    "q_forecast_revenue",
-    "q_market_share",
-    "q_product_profit",
-    "q_bm25_topk",
-    "q_hybrid_search_rrf",
-    "q_cm_sketch_freq",
-    "q_agg_rollup",
-    "q_pivot",
-    "q_asof_join",
-    "q_range_join",
-    "q_gapfill_daily",
-    "q_latest_per_key",
-    "q_percentiles",
-    "q_json_extract",
-)
-
-# Re-certified in round 12 (the round-12 window's tail slots): the 12
-# then-stalest r7-dated greens. Parked with the fresh tail.
-_R7_RECERT_R12: tuple[str, ...] = (
-    "q_sample_temperature",
-    "q_zorder_key",
-    "q_event_anomaly",
-    "q_constraint_audit",
-    "q_semantic_doc_search",
-    "q_agg_cube",
-    "q_agg_distinct",
-    "q_array_funcs",
-    "q_except",
-    "q_grouping_sets",
-    "q_having_cte",
-    "q_intersect",
-)
-
-# Re-certified in round 13 (CORRECTNESS_r13 rows 6-43): the formerly
-# r7-dated greens, the whole backlog retired in one window. Parked
-# with the fresh tail.
-_R7_GREEN: tuple[str, ...] = (
-    "q_join_anti",
-    "q_join_full_outer",
-    "q_join_semi",
-    "q_local_supplier_volume",
-    "q_map_funcs",
-    "q_math_funcs",
-    "q_order_priority_count",
-    "q_pandas_udaf",
-    "q_salted_agg",
-    "q_split_explode",
-    "q_string_funcs",
-    "q_subquery_scalar",
-    "q_union_all",
-    "q_unpivot",
-    "q_window_lag_delta",
-    "q_window_range_frame",
-    "q_window_rank_family",
-    "q_events_tumbling",
-    "q_ann_cosine_topk",
-    "q_ann_filtered_topk",
-    "q_ann_lsh_topk",
-    "q_corpus_split",
-    "q_decontaminate",
-    "q_dedup_clusters",
-    "q_embed_neardup",
-    "q_events_funnel",
-    "q_events_funnel_windowed",
-    "q_events_sliding",
-    "q_group_trend_pandas",
-    "q_lang_id",
-    "q_pandas_udf_cosine",
-    "q_retention_cohorts",
-    "q_scd2_history",
-    "q_stratified_sample",
-    "q_text_quality",
-    "q_stream_tws_counts",
-    "q_stream_tws_idle_sessions",
-    "q_dup_span_maximal",
-)
-
-# Window order = staleness order: never-certified round-14 additions
-# first, then the r8 backlog (the 43 oldest standing checks — VERDICT
-# r13 ask #1), then the r9 blocks (next-stalest — their heads fill the
-# round-14 window's remaining slots), then progressively fresher
-# blocks.
-_PRIORITY: tuple[str, ...] = (
-    _R14_QUEUE
-    + _R8_GREEN_A
-    + _R8_GREEN_B
-    + _R9_GREEN
-    + _R9_RECERT
-    + _R10_QUEUE
-    + _R3_GREEN
-    + _R4_RECERT_R10
-    + _R11_QUEUE
-    + _R5_FLAGSHIPS
-    + _R5_RECERT_R11
-    + _R4_GREEN
-    + _R12_QUEUE
-    + _R5_STALE
-    + _R7_RECERT_R12
-    + _R13_QUEUE
-    + _R7_GREEN
-    + _R8_RECERT_R13
-)
+def _last_green() -> dict[str, int]:
+    """Name -> last round whose CORRECTNESS_r*.json row hash-matched."""
+    last: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row["hash_match"]:
+                last[name] = max(rnd, last.get(name, 0))
+    return last
 
 
 def _ordered_specs() -> list[QuerySpec]:
     _import_plans()
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"_PRIORITY names not registered: {missing}")
-    tail = [s for n, s in REGISTRY.items() if n not in set(_PRIORITY)]
-    return [REGISTRY[n] for n in _PRIORITY] + tail
+    last = _last_green()
+    return sorted(REGISTRY.values(), key=lambda s: last.get(s.name, 0))
 
 
 def all_queries() -> dict[str, QueryFn]:
@@ -581,36 +162,29 @@ def all_oracles() -> dict[str, str]:
 
 def _import_plans() -> None:
     """Import every module that registers queries (idempotent)."""
-    from . import analog  # noqa: F401
-
-    _OPTIONAL = (
-        "relational",
-        "functions_suite",
-        "temporal_suite",
-        "arrays_suite",
-        "sql_suite",
-        "tpch_suite",
-        "pandas_suite",
-        "udtf_suite",
-        "events_suite",
-        "dedup_suite",
-        "graph_suite",
-        "similarity_suite",
-        "text_suite",
-        "curation_suite",
-        "multimodal_suite",
-        "streaming_suite",
-        "scale_suite",
+    # import order is registration order, which breaks ties in
+    # _ordered_specs()
+    from . import (  # noqa: F401
+        analog,
+        relational,
+        functions_suite,
+        temporal_suite,
+        arrays_suite,
+        sql_suite,
+        tpch_suite,
+        pandas_suite,
+        udtf_suite,
+        events_suite,
+        dedup_suite,
+        graph_suite,
+        similarity_suite,
+        text_suite,
+        curation_suite,
+        multimodal_suite,
+        streaming_suite,
+        scale_suite,
     )
-    import importlib
 
-    for mod in _OPTIONAL:
-        try:
-            importlib.import_module(f"{__package__}.{mod}")
-        except ModuleNotFoundError as e:
-            # tolerate only *our own* not-yet-written plan modules
-            if f"plans.{mod}" not in str(e):
-                raise
     # post-import registrations that need the WHOLE registry in view
     # (a module-bottom snapshot can run early: scale_suite is imported
     # mid-streaming_suite by an oracle builder)

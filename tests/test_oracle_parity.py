@@ -37,26 +37,6 @@ def test_contract_shape():
     assert len(q) >= 3
 
 
-def test_priority_subset_of_registry():
-    """Every _PRIORITY name must be registered (no Spark session needed).
-
-    Round-6 regression guard: a ghost name in _PRIORITY makes
-    _ordered_specs() raise, which takes down queries()/oracle_sql()/entry()
-    and zeroes the driver's correctness artifact. This is the cheap,
-    import-only invariant check — run it after EVERY registry.py edit.
-    """
-    from mapreduce_weather_analysis_spark.plans.registry import (
-        _PRIORITY,
-        _import_plans,
-    )
-
-    _import_plans()
-    missing = sorted(set(_PRIORITY) - set(REGISTRY))
-    assert not missing, f"_PRIORITY names not registered: {missing}"
-    dupes = [n for n in _PRIORITY if _PRIORITY.count(n) > 1]
-    assert not dupes, f"duplicate _PRIORITY names: {sorted(set(dupes))}"
-
-
 def test_registry_docs_fully_formatted():
     """No driver-visible query doc may carry an unsubstituted {PLACEHOLDER}
     — module-level __doc__.format(...) runs after @register copies the
@@ -75,32 +55,66 @@ def test_registry_docs_fully_formatted():
     assert not offenders, f"unformatted doc placeholders: {offenders}"
 
 
-def test_priority_sections_cover_registry_exactly():
-    """Window accounting as code, not comments (VERDICT r7 asks #2/#10):
-    the concatenated staleness sections must cover every registered name
-    exactly once, and the never-driver-certified sections must fit
-    entirely inside the driver's verification window so each new query
-    gets an official row on its first rotation."""
-    from mapreduce_weather_analysis_spark.plans.registry import (
-        _PRIORITY,
-        _R8_GREEN_A,
-        _R8_GREEN_B,
-        _R14_QUEUE,
-        _WINDOW,
-        _import_plans,
+def test_verification_order_is_stalest_first():
+    """queries() is a permutation of the registry ordered by the committed
+    CORRECTNESS_r*.json rows: no name in the driver's first 50 was
+    hash-matched more recently than any name after them, so each round
+    re-checks the stalest queries. Also the tier-1 guard for a malformed
+    artifact, since it reads the real files."""
+    import json
+    from pathlib import Path
+
+    import __spark_entry__ as e
+
+    order = list(e.queries())
+    assert len(order) == len(set(order)) == len(REGISTRY)
+    assert set(order) == set(REGISTRY)
+    last: dict[str, int] = {}
+    root = Path(__file__).resolve().parents[1]
+    for path in root.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row["hash_match"]:
+                last[name] = max(rnd, last.get(name, 0))
+    head, rest = order[:50], order[50:]
+    assert max(last.get(n, 0) for n in head) <= min(
+        last.get(n, 0) for n in rest
     )
 
-    _import_plans()
-    assert len(_PRIORITY) == len(set(_PRIORITY)) == len(REGISTRY)
-    assert set(_PRIORITY) == set(REGISTRY)
-    # the round-14 window leads with the never-certified _R14_QUEUE,
-    # then ALL 43 r8-dated greens — the whole remaining re-certification
-    # backlog (VERDICT r13 ask #1) — with the stalest r9 heads filling
-    # the remaining slots
-    head = _R14_QUEUE + _R8_GREEN_A + _R8_GREEN_B
-    assert len(_R8_GREEN_A) + len(_R8_GREEN_B) == 43
-    assert len(head) <= _WINDOW
-    assert _PRIORITY[: len(head)] == head
+
+def test_verification_order_rule(tmp_path, monkeypatch):
+    """The ordering rule on synthetic artifacts: never hash-matched names
+    lead, a red row does not certify, ties keep registration order, and
+    names that are not registered are ignored."""
+    import json
+
+    from mapreduce_weather_analysis_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_ROOT", tmp_path)
+    names = list(REGISTRY)
+    assert [s.name for s in registry._ordered_specs()] == names
+
+    def row(ok: bool) -> dict:
+        return {"hash_match": ok, "rows_match": ok, "err": None}
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps(
+            {
+                names[3]: row(True),
+                names[0]: row(True),
+                names[4]: row(True),
+                names[1]: row(False),
+                "q_not_registered": row(True),
+            }
+        )
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({names[2]: row(True), names[4]: row(False)})
+    )
+    certified = [names[0], names[3], names[4], names[2]]
+    never = [n for n in names if n not in certified]
+    assert names[1] in never
+    assert [s.name for s in registry._ordered_specs()] == never + certified
 
 
 def test_no_oracle_is_vacuously_empty():
