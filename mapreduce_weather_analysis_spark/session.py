@@ -41,6 +41,13 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
 
     Queries received an externally built session (the driver's); only
     runtime-mutable SQL confs are touched — never the master or memory.
+
+    The pin runs once per live session, with no re-check afterwards:
+    callers must not change the four pinned confs (session time zone,
+    ``nanosAsLong``, ``inferTimestampNTZ.enabled``,
+    ``shuffle.partitions``) mid-session. A session whose pinned conf was
+    changed after the first query keeps the changed value, and later
+    queries run under it.
     """
     if spark in _CONF_PINNED:
         return spark

@@ -9,6 +9,7 @@ and (at 100 TB) partition pruning on a month/key directory layout.
 from __future__ import annotations
 
 import os
+import stat
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,30 +38,48 @@ TABLE_NAMES = (
 # The value is the LAZY resolved DataFrame — immutable plan metadata; no
 # rows, no results, nothing is computed until the caller's own action,
 # so every bench/oracle invocation still computes from the parquet
-# inputs. Keyed by the live session (weakly — a stopped session drops
-# its entries) and the file identity (path, size, mtime_ns), so a
-# changed fixture file re-infers instead of serving a stale schema.
+# inputs. Held per live session (weakly — a stopped session drops its
+# entries) as one (identity, df) entry per path: a changed input
+# replaces its entry instead of accumulating beside it. The identity is
+# (size, mtime_ns) for a single file — one os.stat, the common case —
+# and (relpath, size, mtime_ns) of every file under a directory, so a
+# part file added or rewritten anywhere under it re-resolves the
+# relation instead of serving a stale file listing.
 _RELATION_CACHE: "WeakKeyDictionary[SparkSession, dict]" = (
     WeakKeyDictionary()
 )
 
 
+def _identity(path: str) -> tuple:
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            fst = os.stat(full)
+            files.append(
+                (os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns)
+            )
+    return tuple(sorted(files))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    key = (path, st.st_size, st.st_mtime_ns)
+    key = _identity(path)
     per_session = _RELATION_CACHE.setdefault(spark, {})
-    df = per_session.get(key)
-    if df is not None:
-        return df
+    hit = per_session.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
     df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # TIMESTAMP(NANOS) read as int64 nanos (see session.py): rebuild a
         # µs timestamp — floor division matches DuckDB's ns→µs truncation.
         # integer `div`, not `/`: ns values (~1.7e18) exceed double precision
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    per_session[key] = df
+    per_session[path] = (key, df)
     return df
 
 

@@ -231,3 +231,28 @@ def test_unchanged_fixture_never_rebuilds(spark, tmp_path):
     assert ivfpq_write(spark, sf) == paths["ivfpq"]
     for k, p in paths.items():
         assert _snapshot(p) == before[k], f"{k} artifact rewritten on warm call"
+
+
+def test_relation_memo_sees_nested_part_files(spark, tmp_path):
+    """The relation-handle memo must not serve a stale file listing for a
+    parquet DIRECTORY: a part file added inside an existing partition
+    directory leaves the top-level directory's own stat unchanged, so the
+    key has to cover every file under it. A changed input also replaces
+    its memo entry rather than adding one beside it."""
+    from mapreduce_weather_analysis_spark.sources.tables import (
+        _RELATION_CACHE,
+        load_table,
+    )
+
+    sf = tmp_path / "memo_sf"
+    part = sf / "t.parquet" / "k=1"
+    part.mkdir(parents=True)
+    rows = pa.table({"v": list(range(10))})
+    pq.write_table(rows, part / "part-0.parquet")
+    assert load_table(spark, str(sf), "t").count() == 10
+    assert load_table(spark, str(sf), "t") is load_table(spark, str(sf), "t")
+
+    pq.write_table(rows, part / "part-1.parquet")
+    assert load_table(spark, str(sf), "t").count() == 20
+    memo = _RELATION_CACHE[spark]
+    assert sum(1 for p in memo if p.startswith(str(sf))) == 1

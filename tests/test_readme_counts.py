@@ -107,38 +107,34 @@ def test_readme_no_inline_query_counts_outside_block():
     )
 
 
-def test_baseline_md_master_table_matches_bench():
-    """BASELINE.md's master table (the operative per-query numbers) must
-    stay byte-consistent with bench.BASELINE_SEC / STREAM_DRAIN_SEC —
-    the same drift-to-test conversion the README counts got, applied to
-    the gate's numbers (round-13 candidate #5, landed round 12)."""
-    import re
+def test_master_table_loader_rejects_bad_rows():
+    """bench.py reads its gated query set from BASELINE.md's master
+    table, so the loader must refuse a row it cannot parse or a name the
+    registry does not know (both at import, before any Spark session),
+    and the ground-truth tier must stay off the timed wall."""
+    import pytest
 
+    sys.path.insert(0, str(REPO))
     import bench
 
-    text = (REPO / "BASELINE.md").read_text()
-    block = re.search(
-        r"## Master baseline table \(generated, test-pinned\)\n(.*?)(?:\n## |\Z)",
-        text,
-        re.S,
+    head = "## Master baseline table\n\n| query | baseline_s | drain_s |\n"
+    head += "|---|---|---|\n"
+    wall, drain, names = bench._read_master_table(
+        head + "| q_max_month | 3.4 |  |\n| q_stream_ks_drift | 0.6 | 0.23 |\n"
+        "\n## Next section\n| q_not_a_query | 1.0 |  |\n"
     )
-    assert block, "BASELINE.md must keep the master baseline table"
-    rows = {}
-    for m in re.finditer(
-        r"^\| (q_\w+) \| ([0-9.]*) \| ([0-9.]*) \|$", block.group(1), re.M
-    ):
-        rows[m.group(1)] = (
-            float(m.group(2)) if m.group(2) else None,
-            float(m.group(3)) if m.group(3) else None,
-        )
-    want = {
-        n: (bench.BASELINE_SEC.get(n), bench.STREAM_DRAIN_SEC.get(n))
-        for n in set(bench.BASELINE_SEC) | set(bench.STREAM_DRAIN_SEC)
-    }
-    assert rows == want, {
-        "missing": sorted(set(want) - set(rows)),
-        "stale": sorted(set(rows) - set(want)),
-        "diff": sorted(
-            n for n in set(rows) & set(want) if rows[n] != want[n]
-        ),
-    }
+    assert wall == {"q_max_month": 3.4, "q_stream_ks_drift": 0.6}
+    assert drain == {"q_stream_ks_drift": 0.23}
+    assert names == ["q_max_month", "q_stream_ks_drift"]
+    with pytest.raises(ValueError, match="malformed"):
+        bench._read_master_table(head + "| q_max_month | 3.4 s |  |\n")
+    with pytest.raises(ValueError, match="not registered"):
+        bench._read_master_table(head + "| q_not_a_query | 1.0 |  |\n")
+
+    reg = bench.REGISTRY
+    gt = {n for n in reg if reg[n].scale_tier == "ground-truth"}
+    assert bench.GROUND_TRUTH and set(bench.GROUND_TRUTH) <= gt
+    assert not set(bench.HEADLINE) & gt
+    assert len(bench.HEADLINE) + len(bench.GROUND_TRUTH) == len(
+        bench.BASELINE_SEC.keys() | bench.STREAM_DRAIN_SEC.keys()
+    )
