@@ -4,8 +4,10 @@ The reference's only sink is TextOutputFormat part files with
 ``key<TAB>value`` lines and ``%.3f`` rounding (Job1.java:106-107,145).
 That formatted text sink is reproduced here verbatim; the engine's
 canonical sink is partitioned parquet (columnar + pushdown + partition
-pruning — the 100 TB layout: partition by the dominant filter key, which
-for the reference workload is the month bucket).
+pruning). The 100 TB layout (:func:`write_parquet`): partition by the
+dominant filter key (the month bucket here), rebalanced on it so AQE
+bounds each partition's files by its advisory size, not by one file per
+(scan task x partition), i.e. splits x months of KB-sized files.
 """
 
 from __future__ import annotations
@@ -29,15 +31,6 @@ def write_formatted_text(df: DataFrame, path: str, mode: str = "overwrite") -> N
     lines.write.mode(mode).text(path)
 
 
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Canonical columnar sink. Partition columns become directory keys →
-    partition pruning for any filter on them; combine with
-    ``maxRecordsPerFile`` / AQE coalescing to avoid small-file explosions."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", True).csv(path)
 
@@ -56,8 +49,11 @@ def write_parquet(
     ``maxRecordsPerFile`` to cap file size so downstream scans get
     even-sized splits. At 100 TB, output file sizing is a first-order
     concern: too-small files melt the namenode/listing, too-large files
-    serialize the scan — target 128 MB-1 GB via this cap plus AQE
-    coalescing of the final stage."""
+    serialize the scan — target 128 MB-1 GB via this cap. With
+    ``partition_cols`` the frame is first rebalanced on them (module
+    docstring)."""
+    if partition_cols:
+        df = df.hint("rebalance", *partition_cols)
     w = df.write.mode(mode).option("compression", compression)
     if max_records_per_file is not None:
         w = w.option("maxRecordsPerFile", max_records_per_file)
@@ -68,23 +64,21 @@ def write_parquet(
 
 def ingest_weather_to_parquet(
     spark: SparkSession, weather_csv: str, location_csv: str, out_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Reference-shaped CSV → typed, month-partitioned parquet (the
-    ingestion that turns the reference's scan-everything CSV layout into a
-    partition-pruned columnar one). Returns the written relations."""
+) -> None:
+    """Reference-shaped CSV → ``<out_dir>/weather`` (typed, partitioned by
+    ``year_month``: the reference's scan-everything CSV layout becomes a
+    partition-pruned columnar one) and ``<out_dir>/location`` parquet."""
     from ..functions.datetime_fns import month_bucket
     from .weather_csv import read_location_csv, read_weather_csv, typed_weather
 
     wx = typed_weather(read_weather_csv(spark, weather_csv)).withColumn(
         "year_month", month_bucket("date")
     )
-    write_parquet_partitioned(wx, f"{out_dir}/weather", ["year_month"])
+    write_parquet(
+        wx, f"{out_dir}/weather", partition_cols=["year_month"], compression="snappy"
+    )
     loc = read_location_csv(spark, location_csv)
     loc.write.mode("overwrite").parquet(f"{out_dir}/location")
-    return (
-        spark.read.parquet(f"{out_dir}/weather"),
-        spark.read.parquet(f"{out_dir}/location"),
-    )
 
 
 def compact_parquet_dir(
@@ -101,15 +95,20 @@ def compact_parquet_dir(
     the scan). File count comes from the directory's CURRENT on-disk
     bytes (compressed), so the rewrite preserves density rather than
     guessing from row counts; round-robin repartition gives even output
-    sizes regardless of key skew. Writes to a sibling ``<path>.compact``
-    then atomically renames over the original (never reads and
-    overwrites the same live dir in one job — Spark would delete the
-    input before the scan under overwrite mode).
+    sizes regardless of key skew. Writes a sibling ``<path>.compact``
+    (overwrite would delete the live input before its scan), then deletes
+    ``path`` and renames the sibling into place: two steps, not atomic.
+    Raises ValueError, before writing, on a hive-partitioned directory
+    (a ``name=value`` subdir): the flat rewrite would lose its layout.
 
     Returns {files_before, files_after, bytes} for the caller's audit
     log."""
     import os
     import shutil
+
+    hive = [d for _r, dirs, _f in os.walk(path) for d in dirs if "=" in d]
+    if hive:
+        raise ValueError(f"{path} is hive-partitioned ({hive[0]}); not compacted")
 
     def _du(p: str) -> tuple[int, int]:
         n, b = 0, 0

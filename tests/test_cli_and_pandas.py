@@ -34,6 +34,38 @@ def test_cli_job2_arg_quirk_and_format(spark, fixture_paths, tmp_path):  # noqa:
     assert line == "2023-01,111.0"
 
 
+def test_cli_ingest_matches_duckdb(spark, fixture_paths, tmp_path):  # noqa: F811
+    """`ingest` writes month-partitioned weather parquet whose rows,
+    months and exact decimal precipitation sum equal DuckDB's reading of
+    the CSV (the perfbench ingest oracle's SQL), plus the location table."""
+    import duckdb
+
+    wx, loc = fixture_paths
+    out = str(tmp_path / "ingest_out")
+    assert main(["ingest", wx, loc, out]) == 0
+
+    con = duckdb.connect()
+    expected = con.execute(
+        f"""
+        SELECT count(*), count(DISTINCT strftime(strptime(date, '%m/%d/%Y'), '%Y-%m')),
+               sum(COALESCE(TRY_CAST(precipitation_hours AS DOUBLE), 0.0)::DECIMAL(38,1))
+        FROM read_csv('{wx}', header=true, all_varchar=true)
+        WHERE location_id IS NOT NULL AND date IS NOT NULL AND date <> ''
+        """
+    ).fetchone()
+    got = con.execute(
+        f"""
+        SELECT count(*), count(DISTINCT year_month),
+               sum(precipitation_hours::DECIMAL(38,1))
+        FROM read_parquet('{out}/weather/*/*.parquet', hive_partitioning=true)
+        """
+    ).fetchone()
+    con.close()
+    assert got == expected
+    assert got[:2] == (6, 2)
+    assert spark.read.parquet(f"{out}/location").count() == 3
+
+
 def test_cli_unknown_command():
     assert main(["frobnicate"]) == 2
 

@@ -33,7 +33,9 @@ def test_formatted_text_sink_roundtrip(spark, fixture_paths, tmp_path):  # noqa:
 def test_ingest_weather_partitioned_parquet(spark, fixture_paths, tmp_path):  # noqa: F811
     wx_path, loc_path = fixture_paths
     out = str(tmp_path / "ingested")
-    wx, loc = ingest_weather_to_parquet(spark, wx_path, loc_path, out)
+    assert ingest_weather_to_parquet(spark, wx_path, loc_path, out) is None
+    wx = spark.read.parquet(f"{out}/weather")
+    loc = spark.read.parquet(f"{out}/location")
 
     assert set(wx.columns) >= {
         "location_id",
@@ -41,14 +43,19 @@ def test_ingest_weather_partitioned_parquet(spark, fixture_paths, tmp_path):  # 
         "precipitation_hours",
         "year_month",
     }
+    assert loc.count() == 3
     # month-partitioned layout on disk → partition pruning applies
     import os
 
     parts = {p for p in os.listdir(f"{out}/weather") if p.startswith("year_month=")}
     assert parts == {"year_month=2023-01", "year_month=2023-02"}
+    # rebalanced on year_month: one file per month at fixture size, not
+    # one per (scan task x month)
+    for part in parts:
+        files = os.listdir(f"{out}/weather/{part}")
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, files
 
     pruned = wx.where(F.col("year_month") == "2023-01")
-    plan = pruned.explain(mode="formatted") or ""
     # partition filter must appear in the scan, not a post-filter
     import io
     from contextlib import redirect_stdout
@@ -61,7 +68,9 @@ def test_ingest_weather_partitioned_parquet(spark, fixture_paths, tmp_path):  # 
 
 
 def test_parquet_writer_matrix(spark, tmp_path):
-    """Codec round-trip (zstd + snappy) and maxRecordsPerFile splitting."""
+    """Codec round-trip (zstd + snappy), maxRecordsPerFile splitting, and
+    the partitioned write's rebalance: one file per partition value, not
+    one per (input task x value)."""
     from mapreduce_weather_analysis_spark.sources.sinks import write_parquet
 
     df = spark.range(1000).withColumn("v", F.col("id") * 2)
@@ -79,6 +88,15 @@ def test_parquet_writer_matrix(spark, tmp_path):
     parts = [p for p in (tmp_path / "capped").iterdir() if p.suffix == ".parquet"]
     assert len(parts) == 10  # 1000 rows / 100-row cap
     assert spark.read.parquet(capped).count() == 1000
+
+    parted = str(tmp_path / "parted")
+    keyed = df.repartition(8).withColumn("k", F.col("id") % 3)
+    write_parquet(keyed, parted, partition_cols=["k"])
+    for k in range(3):
+        part = tmp_path / "parted" / f"k={k}"
+        files = [p for p in part.iterdir() if p.suffix == ".parquet"]
+        assert len(files) == 1, files  # 8 without the rebalance
+    assert spark.read.parquet(parted).count() == 1000
 
 
 def test_json_and_orc_roundtrip(spark, tmp_path):
@@ -125,3 +143,37 @@ def test_compact_parquet_dir_merges_small_files(spark, tmp_path):
     after = sorted(r.id for r in after_df.collect())
     assert after == before
     assert after_df.where("v != id * 2").count() == 0
+
+
+def test_compact_parquet_dir_refuses_partitioned_table(spark, tmp_path):
+    """A hive-partitioned directory is refused before anything is
+    written: a flat rewrite would turn ``k`` into a data column and lose
+    the partition layout and pruning."""
+    import os
+
+    import pytest
+
+    from mapreduce_weather_analysis_spark.sources.sinks import (
+        compact_parquet_dir,
+    )
+
+    path = str(tmp_path / "parted")
+    spark.range(300).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(
+        path
+    )
+
+    def listing() -> list[str]:
+        return sorted(
+            os.path.relpath(os.path.join(root, f), path)
+            for root, _dirs, files in os.walk(path)
+            for f in files
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="hive-partitioned"):
+        compact_parquet_dir(spark, path, target_bytes=64 * 1024)
+    assert listing() == before
+    assert not os.path.exists(path + ".compact")
+    back = spark.read.parquet(path)
+    assert back.count() == 300
+    assert back.where("k = 1").count() == 100
