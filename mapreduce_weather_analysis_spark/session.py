@@ -15,6 +15,18 @@ Scale notes (100 TB posture):
   coalescing to right-size it from ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
 * Session timezone pinned to UTC so date bucketing is reproducible across
   engines (the DuckDB oracle is UTC-naive).
+* File-scan split floor ``spark.sql.files.openCostInBytes`` = 1 MiB
+  (:data:`FILES_OPEN_COST_BYTES`; Spark's default is 4 MiB). Spark sizes a
+  scan split as ``min(maxPartitionBytes, max(openCost, (bytes + files ×
+  openCost) / cores))``, so the floor binds only when an input is smaller
+  than about cores × floor: at 4 MiB the 4.9 MB weather CSV scanned as 2
+  tasks on 4 cores, and the CSV parse is the costliest work of Job1, Job2
+  and ``ingest``. At 100 TB the bytes-per-core term is far above the floor
+  in both settings. For a directory of many small files packing does not
+  depend on the floor either: each file is charged about one open cost
+  against a budget of about files × open cost / cores, so the scan still
+  gets about ``cores`` partitions. 1 MiB still keeps a split worth a task:
+  about 0.15 s of CSV parsing on one core (SCALE.md, round 17).
 """
 
 from __future__ import annotations
@@ -25,6 +37,11 @@ from weakref import WeakSet
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Scan split floor of engine-built sessions (see "Scale notes" above).
+# Posture, not correctness: ensure_session_conf leaves a foreign session's
+# value alone.
+FILES_OPEN_COST_BYTES = 1 << 20
 
 # Sessions already pinned by ensure_session_conf (weak — a stopped
 # session drops out). Pinning is idempotent, but each conf.set is a
@@ -89,6 +106,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.files.openCostInBytes", str(FILES_OPEN_COST_BYTES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

@@ -8,6 +8,9 @@ ways), Q5 (argmax tie → earliest month).
 
 from __future__ import annotations
 
+import math
+import os
+
 import pytest
 
 from mapreduce_weather_analysis_spark.plans.weather import (
@@ -15,6 +18,7 @@ from mapreduce_weather_analysis_spark.plans.weather import (
     q_city_month_formatted,
     q_max_month,
 )
+from mapreduce_weather_analysis_spark.session import FILES_OPEN_COST_BYTES
 from mapreduce_weather_analysis_spark.sources.weather_csv import (
     read_location_csv,
     read_weather_csv,
@@ -130,3 +134,42 @@ def test_split_unioned_feed(spark, fixture_paths):
     loc, wx = split_unioned_feed(lines)
     assert loc.count() == 4  # 3 cities + location header (8 cols each)
     assert wx.count() == 7  # 6 weather rows + weather header
+
+
+def test_multi_split_weather_csv_is_exact(spark, tmp_path):
+    """A weather CSV scanned as several splits reads every row once.
+
+    The golden fixture above is one split. This ~2.5 MB CSV is larger than
+    the session's 1 MiB split floor, so on two or more cores it scans as
+    several tasks: the header must be dropped exactly once and no row lost
+    or doubled at a split boundary, and Job1/Job2 must still equal the
+    DuckDB reference.
+    """
+    from perfbench.datagen import weather_csvs
+    from perfbench.workloads import WeatherOracle
+
+    gen = weather_csvs(str(tmp_path), seed=17, mult=2, days=1096)
+    assert spark.conf.get("spark.sql.files.openCostInBytes") == str(
+        FILES_OPEN_COST_BYTES
+    )
+    # Spark's FilePartition.maxSplitBytes; one file splits into
+    # ceil(bytes / maxSplitBytes) partitions.
+    cores = spark.sparkContext.defaultParallelism
+    size = os.path.getsize(gen["weather_csv"])
+    max_split = min(
+        128 * 1024 * 1024,
+        max(FILES_OPEN_COST_BYTES, (size + FILES_OPEN_COST_BYTES) // cores),
+    )
+    wx = read_weather_csv(spark, gen["weather_csv"])
+    parts = wx.rdd.getNumPartitions()
+    assert parts == math.ceil(size / max_split)
+    if cores >= 2:
+        assert parts > 1
+
+    assert wx.count() == gen["weather_rows"]
+    oracle = WeatherOracle(gen["weather_csv"], gen["location_csv"])
+    loc = read_location_csv(spark, gen["location_csv"])
+    lines = sorted(r.line for r in q_city_month_formatted(wx, loc).collect())
+    assert lines == oracle.job1_lines
+    [row] = q_max_month(wx).collect()
+    assert row.year_month == oracle.job2_month
