@@ -39,6 +39,7 @@ from mapreduce_weather_analysis_spark.plans.registry import (  # noqa: E402
     REGISTRY,
     _import_plans,
 )
+from perfbench.layers import Tracer  # noqa: E402
 
 # Registers every plan (well under a second, no session started) so the
 # master table's names and tiers are checked at import, before the JVM.
@@ -244,18 +245,33 @@ def _clear_persisted(spark) -> None:
 # drain_s where a drain baseline exists.
 STREAM_SPLIT: dict[str, dict[str, float]] = {}
 
+# A draw's drain is the sum of its ``streaming.drain`` spans: the time
+# inside StreamingQuery.awaitTermination, which every registered stream
+# reaches through events_stream.run_available_now{,_files}. The tracer is
+# never install()ed or attach()ed, so no listener or py4j counter runs in
+# the gated draws.
+_DRAINS = Tracer()
+
+
+def _trace_drains() -> None:
+    """Wrap StreamingQuery.awaitTermination in a ``_DRAINS`` span."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    StreamingQuery.awaitTermination = _DRAINS.wrap(
+        StreamingQuery.awaitTermination, "streaming.drain", "streaming"
+    )
+    _DRAINS.enabled = True
+
 
 def _time_best_of_2(spark, fn, name: str | None = None) -> float:
-    from mapreduce_weather_analysis_spark.streaming import events_stream as _es
-
     best = float("inf")
     best_drain = 0.0
     for _ in range(2):
-        n0 = len(_es.DRAIN_TIMINGS)
+        _DRAINS.spans.clear()
         start = time.perf_counter()
         fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
         wall = time.perf_counter() - start
-        drain = sum(d["drain_s"] for d in _es.DRAIN_TIMINGS[n0:])
+        drain = sum(s["end"] - s["start"] for s in _DRAINS.spans)
         if wall < best:
             best, best_drain = wall, drain
     _clear_persisted(spark)  # this query's checkpoints don't tax the next
@@ -273,6 +289,7 @@ def main() -> None:
     from mapreduce_weather_analysis_spark.session import get_spark
 
     spark = get_spark(app_name="mwa-spark-bench")
+    _trace_drains()
     # the core count the session actually runs on (get_spark's rule):
     # names the artifact and decides whether the 32-core gate is fatal
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))

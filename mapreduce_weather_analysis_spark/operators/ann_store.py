@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import sq_l2
-from ..sources.tables import load_table
+from ..sources.tables import _stamp, load_table
 from .ivf import IVF_NPROBE, ivf_index
 from .pq import _subvectors, pq_index
 
@@ -64,9 +64,9 @@ def _build_signature() -> str:
 
 
 def _fingerprint(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "embeddings.parquet"))
     return hashlib.md5(
-        f"{st.st_size}:{st.st_mtime_ns}:{_build_signature()}".encode()
+        f"{stamp}:{_build_signature()}".encode()
     ).hexdigest()[:12]
 
 
@@ -221,9 +221,9 @@ def _imi_signature() -> str:
 
 
 def imi_index_path(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "embeddings.parquet"))
     fp = hashlib.md5(
-        f"imi:{st.st_size}:{st.st_mtime_ns}:{_imi_signature()}".encode()
+        f"imi:{stamp}:{_imi_signature()}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(INDEX_ROOT, f"{base}-imi-{fp}-{_LAYOUT_VERSION}")
@@ -429,9 +429,9 @@ def docvec_index_path(sf_dir: str) -> str:
     """Index path for a DOCUMENT-vector index (hashed-count featurizer
     output) — fingerprinted on the documents file (not embeddings) plus
     the featurizer AND build constants."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"docvec:{st.st_size}:{st.st_mtime_ns}:{_build_signature()}:"
+        f"docvec:{stamp}:{_build_signature()}:"
         f"{_featurizer_signature()}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))
@@ -488,9 +488,9 @@ def chunkvec_index_path(sf_dir: str) -> str:
     prefix from docvec — same source file, different retrieval unit."""
     from ..plans.text_suite import _CHUNK_SIZE, _CHUNK_STRIDE
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"chunkvec:{st.st_size}:{st.st_mtime_ns}:{_build_signature()}:"
+        f"chunkvec:{stamp}:{_build_signature()}:"
         f"{_featurizer_signature()}:cs={_CHUNK_SIZE}:stride={_CHUNK_STRIDE}:"
         f"radix={CHUNK_KEY_RADIX}".encode()
     ).hexdigest()[:12]
@@ -522,9 +522,9 @@ def abtt_index_path(sf_dir: str) -> str:
     """Index path for the ABTT-CORRECTED vector index (Mu & Viswanath
     ICLR'18 post-processing baked into the artifact): fingerprinted on
     the embeddings file + build constants + the correction signature."""
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "embeddings.parquet"))
     fp = hashlib.md5(
-        f"abtt:{st.st_size}:{st.st_mtime_ns}:{_build_signature()}:"
+        f"abtt:{stamp}:{_build_signature()}:"
         f"{_abtt_signature()}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))
@@ -537,9 +537,9 @@ def binary_index_path(sf_dir: str, variant: str = "bin_v1") -> str:
     the packing recipe (64 dims split into two 32-bit bigint halves).
     ``variant`` names the code recipe ("bin_v1" raw sign bits,
     "binrot_v2" HD-rotated) so the flat layouts never collide."""
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "embeddings.parquet"))
     fp = hashlib.md5(
-        f"bin:{st.st_size}:{st.st_mtime_ns}:{variant}:dim=64:split=32".encode()
+        f"bin:{stamp}:{variant}:dim=64:split=32".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(INDEX_ROOT, f"{base}-bin-{fp}")
@@ -571,9 +571,9 @@ def binary_cells_index_path(sf_dir: str, variant: str = "bin_v1") -> str:
     the artifact) + the packing recipe. ``variant`` names the code
     recipe — "bin_v1" raw sign bits, "binrot_v2" the HD-rotated codes —
     so the two layouts never collide."""
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "embeddings.parquet"))
     fp = hashlib.md5(
-        f"bincells:{st.st_size}:{st.st_mtime_ns}:{_build_signature()}:"
+        f"bincells:{stamp}:{_build_signature()}:"
         f"{variant}:dim=64:split=32".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))

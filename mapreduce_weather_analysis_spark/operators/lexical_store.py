@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import portable_hash32, portable_hash32_py
 from ..functions.text import has_min_tokens, tokens
-from ..sources.tables import load_table
+from ..sources.tables import _stamp, load_table
 from .ann_store import INDEX_ROOT
 
 _TERM_BUCKETS = 32
@@ -52,9 +52,9 @@ def _lex_signature() -> str:
 
 
 def lexical_index_path(sf_dir: str) -> str:
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"lex:{st.st_size}:{st.st_mtime_ns}:{_lex_signature()}".encode()
+        f"lex:{stamp}:{_lex_signature()}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(INDEX_ROOT, f"{base}-lex-{fp}-{_LEX_LAYOUT}")
@@ -112,9 +112,9 @@ def lexical_segment_path(sf_dir: str, seg: str, pred_tag: str) -> str:
     INDEX_ROOT — every other build constant in this module is in its
     fingerprint, so the split must be too). A changed corpus,
     tokenizer, or split predicate rebuilds the segment."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"lexseg:{st.st_size}:{st.st_mtime_ns}:{_lex_signature()}"
+        f"lexseg:{stamp}:{_lex_signature()}"
         f":{seg}:{pred_tag}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))

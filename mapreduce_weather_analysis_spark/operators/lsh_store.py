@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.compat import HASH_PRIME
+from ..sources.tables import _stamp
 from .ann_store import INDEX_ROOT
 from .dedup import (
     LSH_BANDS,
@@ -49,9 +50,9 @@ _LSH_LAYOUT_VERSION = "lshv1"
 def lsh_index_path(sf_dir: str) -> str:
     """Index path for the persisted LSH band index — fingerprinted on the
     documents file + every constant the signatures depend on."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = _stamp(os.path.join(sf_dir, "documents.parquet"))
     fp = hashlib.md5(
-        f"lsh:{st.st_size}:{st.st_mtime_ns}:k={MINHASH_K}:"
+        f"lsh:{stamp}:k={MINHASH_K}:"
         f"bands={LSH_BANDS}:n={SHINGLE_N}:p={HASH_PRIME}".encode()
     ).hexdigest()[:12]
     base = os.path.basename(os.path.normpath(sf_dir))

@@ -8,6 +8,7 @@ and (at 100 TB) partition pruning on a month/key directory layout.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
 from weakref import WeakKeyDictionary
@@ -63,6 +64,16 @@ def _identity(path: str) -> tuple:
                 (os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns)
             )
     return tuple(sorted(files))
+
+
+def _stamp(path: str) -> str:
+    """Input fingerprint for the persisted index paths: ``"{size}:{mtime_ns}"``
+    of a file, or a digest of :func:`_identity`'s sorted listing of a
+    directory, so a part file rewritten or added anywhere under a
+    directory input changes the path instead of serving a stale index."""
+    if os.path.isdir(path):
+        return hashlib.md5(repr(_identity(path)).encode()).hexdigest()
+    return "{}:{}".format(*_identity(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -22,14 +22,6 @@ from ..session import ensure_session_conf
 
 _DRAIN_ROOT: str | None = None
 
-# Per-drain timing log (VERDICT r10 ask #6): every availableNow drain
-# appends {"setup_s", "drain_s"} — setup is stream/sink construction up
-# to .start() returning, drain is awaitTermination (the micro-batch
-# execution itself). bench.py slices this around each timed run to
-# attribute a stream query's wall to scaffolding vs actual work, and
-# gates the DRAIN (the part a plan regression would move).
-DRAIN_TIMINGS: list[dict[str, float]] = []
-
 
 def _drain_scratch_root() -> str:
     """Lazily-created per-process scratch root for file-sink drains,
@@ -147,9 +139,6 @@ def run_available_now(
 ) -> DataFrame:
     """Drain the bounded stream through a memory sink and return the
     materialized result."""
-    import time
-
-    t0 = time.perf_counter()
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     q = (
         agg.writeStream.outputMode(mode)
@@ -158,10 +147,7 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    t1 = time.perf_counter()
     q.awaitTermination()
-    t2 = time.perf_counter()
-    DRAIN_TIMINGS.append({"setup_s": t1 - t0, "drain_s": t2 - t1})
     return spark.table(name)
 
 
@@ -182,9 +168,7 @@ def run_available_now_files(agg: DataFrame, spark: SparkSession) -> DataFrame:
     per drain leaked corpus-sized parquet across runs). Deletion must
     wait for exit — the returned DataFrame reads the files lazily."""
     import tempfile
-    import time
 
-    t0 = time.perf_counter()
     out = tempfile.mkdtemp(prefix="drain_", dir=_drain_scratch_root())
     q = (
         agg.writeStream.outputMode("append")
@@ -194,10 +178,7 @@ def run_available_now_files(agg: DataFrame, spark: SparkSession) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    t1 = time.perf_counter()
     q.awaitTermination()
-    t2 = time.perf_counter()
-    DRAIN_TIMINGS.append({"setup_s": t1 - t0, "drain_s": t2 - t1})
     return spark.read.schema(agg.schema).parquet(os.path.join(out, "data"))
 
 

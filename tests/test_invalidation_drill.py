@@ -256,3 +256,51 @@ def test_relation_memo_sees_nested_part_files(spark, tmp_path):
     assert load_table(spark, str(sf), "t").count() == 20
     memo = _RELATION_CACHE[spark]
     assert sum(1 for p in memo if p.startswith(str(sf))) == 1
+
+
+def test_index_paths_see_every_file_of_a_directory_input(tmp_path):
+    """Spark-free: a directory-form ``documents.parquet`` / ``embeddings.parquet``
+    whose part file is rewritten in place, or gains a sibling part file,
+    keeps the top-level directory's own stat, so every standing-index path
+    must key on the files under it or a stale index is served."""
+    from mapreduce_weather_analysis_spark.operators import (
+        ann_store,
+        lexical_store,
+        lsh_store,
+    )
+
+    sf = tmp_path / "dir_sf"
+    for name in ("documents", "embeddings"):
+        part = sf / f"{name}.parquet" / "k=0"
+        part.mkdir(parents=True)
+        (part / "part-0.parquet").write_bytes(b"v0")
+
+    def paths() -> dict[str, str]:
+        s = str(sf)
+        return {
+            "ivfpq": ann_store.ivfpq_index_path(s),
+            "imi": ann_store.imi_index_path(s),
+            "docvec": ann_store.docvec_index_path(s),
+            "chunkvec": ann_store.chunkvec_index_path(s),
+            "abtt": ann_store.abtt_index_path(s),
+            "binary": ann_store.binary_index_path(s),
+            "binary_cells": ann_store.binary_cells_index_path(s),
+            "lsh": lsh_store.lsh_index_path(s),
+            "lexical": lexical_store.lexical_index_path(s),
+            "lexseg": lexical_store.lexical_segment_path(s, "base", "all"),
+        }
+
+    first = paths()
+    assert paths() == first  # an unchanged input keeps every path
+    for name in ("documents", "embeddings"):
+        f = sf / f"{name}.parquet" / "k=0" / "part-0.parquet"
+        f.write_bytes(b"v1-rewritten")
+        os.utime(f, ns=(f.stat().st_atime_ns, f.stat().st_mtime_ns + 10**9))
+    rewritten = paths()
+    for k in first:
+        assert rewritten[k] != first[k], f"{k} path ignores a rewritten part file"
+    for name in ("documents", "embeddings"):
+        (sf / f"{name}.parquet" / "k=0" / "part-1.parquet").write_bytes(b"v0")
+    added = paths()
+    for k in first:
+        assert added[k] != rewritten[k], f"{k} path ignores an added part file"
