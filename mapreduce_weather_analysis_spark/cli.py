@@ -4,19 +4,22 @@
     python -m mapreduce_weather_analysis_spark job2 <weather_csv> <location_csv> <job1_out> <job2_out>
     python -m mapreduce_weather_analysis_spark ingest <weather_csv> <location_csv> <out_dir>
 
-* ``job1`` = Q-CITY-MONTH (Job1.java:126-148): formatted ``%.3f`` text out.
+* ``job1`` = Q-CITY-MONTH (Job1.java:126-148): formatted ``%.3f`` text out
+  (``q_city_month_formatted``).
 * ``job2`` = Q-MAX-MONTH (Job2.java:80-106): one ``month,total`` line where
-  total is the raw double string (Job2.java:76 — Spark's double→string IS
-  Java Double.toString, so the byte format matches). Quirk Q6 preserved:
-  four args accepted, only <weather_csv> and <job2_out> used.
-* ``ingest`` = the engine-canonical upgrade: typed, month-partitioned parquet.
+  total is the raw double string (``q_max_month_line``). Quirk Q6
+  preserved: four args accepted, only <weather_csv> and <job2_out> used.
+* ``ingest`` = the engine-canonical upgrade: typed, month-partitioned
+  parquet (``q_weather_by_month``), with the location table written
+  concurrently on a background thread.
+
+Each plan is one SQL statement over the CSV reader DataFrames
+(plans/weather.py), so a job's driver-side build is a few py4j calls.
 """
 
 from __future__ import annotations
 
 import sys
-
-from pyspark.sql import functions as F
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -26,30 +29,23 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     cmd, args = argv[0], argv[1:]
 
-    from .plans.weather import q_city_month, q_max_month
+    from .plans.weather import q_city_month_formatted, q_max_month_line
     from .session import get_spark
-    from .sources.sinks import ingest_weather_to_parquet, write_formatted_text
+    from .sources.sinks import ingest_weather_to_parquet
     from .sources.weather_csv import read_location_csv, read_weather_csv
 
     spark = get_spark(app_name=f"mwa-spark-{cmd}")
 
     if cmd == "job1":
         weather_csv, location_csv, out = args
-        agg = q_city_month(
+        lines = q_city_month_formatted(
             read_weather_csv(spark, weather_csv), read_location_csv(spark, location_csv)
         )
-        write_formatted_text(agg, out)
+        lines.write.mode("overwrite").text(out)
         return 0
     if cmd == "job2":
         weather_csv, _location_csv, _job1_out, out = args  # Q6: middle two unused
-        top = q_max_month(read_weather_csv(spark, weather_csv))
-        line = top.select(
-            F.concat_ws(
-                ",",
-                "year_month",
-                F.col("total_precipitation_hours").cast("string"),
-            ).alias("value")
-        )
+        line = q_max_month_line(read_weather_csv(spark, weather_csv))
         line.coalesce(1).write.mode("overwrite").text(out)
         return 0
     if cmd == "ingest":

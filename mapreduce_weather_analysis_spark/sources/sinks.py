@@ -2,33 +2,31 @@
 
 The reference's only sink is TextOutputFormat part files with
 ``key<TAB>value`` lines and ``%.3f`` rounding (Job1.java:106-107,145).
-That formatted text sink is reproduced here verbatim; the engine's
-canonical sink is partitioned parquet (columnar + pushdown + partition
-pruning). The 100 TB layout (:func:`write_parquet`): partition by the
-dominant filter key (the month bucket here), rebalanced on it so AQE
-bounds each partition's files by its advisory size, not by one file per
-(scan task x partition), i.e. splits x months of KB-sized files.
+That line is built by ``plans.weather.q_city_month_formatted`` and
+written with Spark's plain text writer; the engine's canonical sink is
+partitioned parquet (columnar + pushdown + partition pruning). The
+100 TB layout (:func:`write_parquet`): partition by the dominant filter
+key (the month bucket here), rebalanced on it so AQE bounds each
+partition's files by its advisory size, not by one file per (scan task
+x partition), i.e. splits x months of KB-sized files.
+
+Local writes pay a fork per file and directory: without a native
+libhadoop (the pip-installed pyspark ships none), Hadoop 3.4.2's
+``RawLocalFileSystem.setPermission`` shells out to ``chmod`` once for
+each directory and file a write creates, ``.crc`` sidecars included. On a 4-vCPU host one fork costs 3.2-3.9 ms (a py4j
+``exists`` 0.06-0.08 ms). Over perfbench's weather CSV, ``ingest``
+forks 125 times per run, 113 of them inside its write tasks (the
+weather table's 36 month directories, 36 part files and 36 ``.crc``
+files among them); ``job1`` and ``job2`` fork 9 times each (SCALE.md,
+round 17).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_formatted_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """O11: write ``city,yyyy-MM<TAB>%.3f,%.3f`` lines (expects the
-    q_city_month output schema)."""
-    lines = df.select(
-        F.format_string(
-            "%s,%s\t%.3f,%.3f",
-            df.columns[0],
-            df.columns[1],
-            df.columns[2],
-            df.columns[3],
-        ).alias("value")
-    )
-    lines.write.mode(mode).text(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -67,18 +65,28 @@ def ingest_weather_to_parquet(
 ) -> None:
     """Reference-shaped CSV → ``<out_dir>/weather`` (typed, partitioned by
     ``year_month``: the reference's scan-everything CSV layout becomes a
-    partition-pruned columnar one) and ``<out_dir>/location`` parquet."""
-    from ..functions.datetime_fns import month_bucket
-    from .weather_csv import read_location_csv, read_weather_csv, typed_weather
+    partition-pruned columnar one) and ``<out_dir>/location`` parquet.
 
-    wx = typed_weather(read_weather_csv(spark, weather_csv)).withColumn(
-        "year_month", month_bucket("date")
-    )
-    write_parquet(
-        wx, f"{out_dir}/weather", partition_cols=["year_month"], compression="snappy"
-    )
-    loc = read_location_csv(spark, location_csv)
-    loc.write.mode("overwrite").parquet(f"{out_dir}/location")
+    The two writes are independent, so the one-task location write runs
+    on a background thread (local properties inherited) on the cores the
+    weather write's few month tasks leave idle. Its error is re-raised
+    here once both writes are done."""
+    from ..plans.weather import q_weather_by_month
+    from .weather_csv import read_location_csv, read_weather_csv
+
+    def write_location() -> None:
+        loc = read_location_csv(spark, location_csv)
+        loc.write.mode("overwrite").parquet(f"{out_dir}/location")
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        location = pool.submit(inheritable_thread_target(spark)(write_location))
+        write_parquet(
+            q_weather_by_month(read_weather_csv(spark, weather_csv)),
+            f"{out_dir}/weather",
+            partition_cols=["year_month"],
+            compression="snappy",
+        )
+    location.result()
 
 
 def compact_parquet_dir(

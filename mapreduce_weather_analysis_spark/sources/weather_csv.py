@@ -17,15 +17,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.nulls import zero_if_null
 from ..schemas import LOCATION, WEATHER_ARITY, weather_csv_schema
+
+
+def _ddl(schema: T.StructType) -> str:
+    """The schema as a DDL string: the reader takes it in one py4j call,
+    where a StructType is round-tripped through the JVM's JSON parser."""
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
 
 
 def read_location_csv(spark: SparkSession, path: str) -> DataFrame:
     """27-row dimension (input/locationData.csv); header via CSV option
     instead of the reference's prefix sniffing (Job1.java:27-28)."""
-    return spark.read.csv(path, header=True, schema=LOCATION, mode="PERMISSIVE")
+    return spark.read.csv(path, header=True, schema=_ddl(LOCATION), mode="PERMISSIVE")
 
 
 def read_weather_csv(spark: SparkSession, path: str, n_cols: int = WEATHER_ARITY) -> DataFrame:
@@ -37,32 +43,13 @@ def read_weather_csv(spark: SparkSession, path: str, n_cols: int = WEATHER_ARITY
     string here (coercion is per-query: quirk Q1).
     """
     raw = spark.read.csv(
-        path, header=True, schema=weather_csv_schema(n_cols), mode="PERMISSIVE"
+        path, header=True, schema=_ddl(weather_csv_schema(n_cols)), mode="PERMISSIVE"
     )
-    return raw.select(
-        F.col("location_id").try_cast("int").alias("location_id"),
+    return raw.selectExpr(
+        "try_cast(location_id AS INT) AS location_id",
         "date",
         "temperature_2m_mean",
         "precipitation_hours",
-    )
-
-
-def filter_nonnull_keys(weather: DataFrame) -> DataFrame:
-    """O5 (Job1.java:46): drop rows with empty location_id or date."""
-    return weather.where(
-        F.col("location_id").isNotNull()
-        & F.col("date").isNotNull()
-        & (F.col("date") != "")
-    )
-
-
-def typed_weather(weather: DataFrame) -> DataFrame:
-    """Engine-canonical typed weather relation (Job1 semantics: null→0.0)."""
-    return filter_nonnull_keys(weather).select(
-        "location_id",
-        "date",
-        zero_if_null("temperature_2m_mean").alias("temperature_2m_mean"),
-        zero_if_null("precipitation_hours").alias("precipitation_hours"),
     )
 
 

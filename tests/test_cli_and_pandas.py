@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_weather_analysis_spark.cli import main
@@ -64,6 +65,38 @@ def test_cli_ingest_matches_duckdb(spark, fixture_paths, tmp_path):  # noqa: F81
     assert got == expected
     assert got[:2] == (6, 2)
     assert spark.read.parquet(f"{out}/location").count() == 3
+
+
+def test_cli_jobs_on_multi_split_csv_match_benchmark_oracle(spark, tmp_path):
+    """The path the benchmark times: ``cli.main`` job1, job2 and ingest on
+    its multi-split weather CSV, checked by its own DuckDB oracle, plus
+    the location table ingest writes beside the weather table."""
+    from perfbench.datagen import weather_csvs
+    from perfbench.workloads import WeatherOracle
+
+    gen = weather_csvs(str(tmp_path / "in"), seed=17, mult=2, days=1096)
+    wx, loc = gen["weather_csv"], gen["location_csv"]
+    oracle = WeatherOracle(wx, loc)
+    job1, job2, ingest = (str(tmp_path / d) for d in ("job1", "job2", "ingest"))
+
+    assert main(["job1", wx, loc, job1]) == 0
+    oracle.check_job1(job1)
+    assert main(["job2", wx, loc, job1, job2]) == 0
+    oracle.check_job2(job2)
+    assert main(["ingest", wx, loc, ingest]) == 0
+    oracle.check_ingest(ingest)
+    assert spark.read.parquet(f"{ingest}/location").count() == gen["location_rows"]
+
+
+def test_cli_ingest_raises_when_location_write_fails(fixture_paths, tmp_path):  # noqa: F811
+    """The location table is written on a background thread; its error
+    must reach the caller instead of dying with the thread."""
+    from pyspark.errors import AnalysisException
+
+    wx, _ = fixture_paths
+    missing = str(tmp_path / "no_such_location.csv")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        main(["ingest", wx, missing, str(tmp_path / "ingest_out")])
 
 
 def test_cli_unknown_command():

@@ -15,8 +15,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_weather_analysis_spark.plans.registry import REGISTRY, _import_plans
+from mapreduce_weather_analysis_spark.plans.weather import q_city_month, q_max_month
+from mapreduce_weather_analysis_spark.sources.sinks import ingest_weather_to_parquet
+from mapreduce_weather_analysis_spark.sources.weather_csv import (
+    read_location_csv,
+    read_weather_csv,
+)
 
 from .conftest import SMOKE_SF
+from .test_weather_golden import fixture_paths  # noqa: F401  (reuse fixture)
 
 _import_plans()
 
@@ -64,6 +71,55 @@ def test_max_month_single_exchange(spark):
     # partial+final agg: exactly one shuffle exchange, then top-1
     assert _n_ops(plan, "Exchange") == 1
     assert "TakeOrderedAndProject" in plan
+
+
+def test_weather_sql_builders_keep_their_plan_shape(spark, fixture_paths):  # noqa: F811
+    """plans/weather.py's SQL statements over the CSV readers: Job1
+    broadcasts the location side, shuffles once for the (city, month)
+    aggregate and reads only the 4 used weather columns; Job2 shuffles
+    once and takes its top-1 without a global sort."""
+    wx_path, loc_path = fixture_paths
+    wx = read_weather_csv(spark, wx_path)
+    plan = _plan(q_city_month(wx, read_location_csv(spark, loc_path)))
+    assert _n_ops(plan, "BroadcastHashJoin") == 1
+    assert _n_ops(plan, "Exchange") == 1
+    assert re.search(
+        r"hashpartitioning\(city_name#\d+, year_month#\d+, \d+\), ENSURE_REQUIREMENTS",
+        plan,
+    )
+    assert (
+        "ReadSchema: struct<location_id:string,date:string,"
+        "temperature_2m_mean:string,precipitation_hours:string>"
+    ) in plan
+
+    plan = _plan(q_max_month(wx))
+    assert _n_ops(plan, "Exchange") == 1
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_ingest_writes_month_rebalanced_relation(
+    spark, fixture_paths, tmp_path, monkeypatch  # noqa: F811
+):
+    """The relation ``ingest`` hands to the parquet writer keeps its one
+    rebalance exchange on ``year_month`` (sources/sinks.py layout)."""
+    from pyspark.sql import DataFrameWriter
+
+    written = {}
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written[path.rsplit("/", 1)[-1]] = self._df
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    wx_path, loc_path = fixture_paths
+    ingest_weather_to_parquet(spark, wx_path, loc_path, str(tmp_path / "out"))
+    assert set(written) == {"weather", "location"}
+    plan = _plan(written["weather"])
+    assert _n_ops(plan, "Exchange") == 1
+    assert re.search(
+        r"hashpartitioning\(year_month#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL", plan
+    )
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):

@@ -5,11 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_weather_analysis_spark.plans.weather import q_city_month
-from mapreduce_weather_analysis_spark.sources.sinks import (
-    ingest_weather_to_parquet,
-    write_formatted_text,
-)
+from mapreduce_weather_analysis_spark.plans.weather import q_city_month_formatted
+from mapreduce_weather_analysis_spark.sources.sinks import ingest_weather_to_parquet
 from mapreduce_weather_analysis_spark.sources.weather_csv import (
     read_location_csv,
     read_weather_csv,
@@ -20,11 +17,11 @@ from .test_weather_golden import fixture_paths  # noqa: F401  (reuse fixture)
 
 def test_formatted_text_sink_roundtrip(spark, fixture_paths, tmp_path):  # noqa: F811
     wx_path, loc_path = fixture_paths
-    agg = q_city_month(
+    formatted = q_city_month_formatted(
         read_weather_csv(spark, wx_path), read_location_csv(spark, loc_path)
     )
     out = str(tmp_path / "text_out")
-    write_formatted_text(agg, out)
+    formatted.write.mode("overwrite").text(out)
     lines = {r.value for r in spark.read.text(out).collect()}
     assert "Colombo,2023-01\t6.000,15.000" in lines
     assert len(lines) == 4
