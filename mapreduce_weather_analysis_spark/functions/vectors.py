@@ -8,6 +8,9 @@ the same order, so cosine scores compare BIT-EXACTLY across engines
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -29,6 +32,25 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def array_literal(values: Iterable[float]) -> str:
+    """Spark SQL text of one ``array<double>`` literal:
+    ``array(0.25D, -1e-05D, ...)``.
+
+    ``repr`` is the shortest text that parses back to the same double,
+    so the literal holds exactly the values ``F.lit(float(x))`` would.
+    The text is built in Python and parsed once, where an ``F.array`` of
+    ``F.lit`` costs a py4j call per element: about 1 s for a 44 × 64
+    centroid table against 3 ms as text (SCALE.md, round 17). NaN and
+    ±inf have no literal form and are rejected."""
+    out = []
+    for x in values:
+        x = float(x)
+        if not math.isfinite(x):
+            raise ValueError(f"array_literal: non-finite value {x!r}")
+        out.append(repr(x) + "D")
+    return "array(" + ", ".join(out) + ")"
 
 
 def dot_sql(a: str, b: str) -> str:

@@ -18,6 +18,7 @@ from ..functions.compat import (
     psum_sql,
 )
 from ..functions.vectors import (
+    array_literal,
     as_double,
     cosine,
     cosine_sql,
@@ -4891,7 +4892,7 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     first = ev.orderBy("vec_id").limit(1).collect()[0]  # deterministic seed
     picks = [(1, int(first["vec_id"]), 0.0)]
-    center_vec = F.array(*[F.lit(float(x)) for x in first["v"]])
+    center_vec = F.expr(array_literal(first["v"]))
     mind = ev.select(
         "vec_id", "v", sq_l2(F.col("v"), center_vec).alias("mind")
     ).localCheckpoint(eager=False)
@@ -4904,7 +4905,7 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((r, cid, float(top["mind"])))
         if r < _KCTR_K:
             nxt = ev.where(F.col("vec_id") == cid).collect()[0]
-            cvec = F.array(*[F.lit(float(x)) for x in nxt["v"]])
+            cvec = F.expr(array_literal(nxt["v"]))
             mind = mind.select(
                 "vec_id",
                 "v",

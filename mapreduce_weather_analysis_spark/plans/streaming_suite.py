@@ -9,9 +9,10 @@ projection; covered by the rows-only q_approx_count_distinct instead).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import array_literal
 from ..streaming.events_stream import (
     read_documents_stream,
     read_embeddings_stream,
@@ -870,6 +871,22 @@ def _stream_index_add_oracle() -> str:
     )
 
 
+def _centroid_literal(cents) -> Column:
+    """The frozen centroid rows (``c``, ``cluster``) as one literal
+    ``array<struct<c: array<double>, cluster: int>>``, parsed from one
+    SQL string: the same optimized plan as an ``F.array`` of
+    ``F.struct(F.array(F.lit ...))``, without a py4j call per float."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('c', {array_literal(r['c'])}, "
+            f"'cluster', {int(r['cluster'])})"
+            for r in cents
+        )
+        + ")"
+    )
+
+
 @register("q_stream_index_add", scale_tier="scale", oracle=_stream_index_add_oracle())
 def q_stream_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index ADD at ingest: arriving vectors are assigned to the
@@ -901,15 +918,7 @@ def q_stream_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(path, "centroids")).collect(),
         key=lambda r: r["cluster"],
     )  # bounded: k = ⌊√N⌋ rows
-    arr = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in r["c"]]).alias("c"),
-                F.lit(int(r["cluster"])).alias("cluster"),
-            )
-            for r in cents
-        ]
-    )
+    arr = _centroid_literal(cents)
     stream = (
         read_embeddings_stream(spark, sf_dir)
         .where(
@@ -1089,15 +1098,7 @@ def q_stream_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(path, "centroids")).collect(),
         key=lambda r: r["cluster"],
     )  # bounded: k = ⌊√N⌋ rows
-    arr = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in r["c"]]).alias("c"),
-                F.lit(int(r["cluster"])).alias("cluster"),
-            )
-            for r in cents
-        ]
-    )
+    arr = _centroid_literal(cents)
     scored_cells = F.transform(
         arr,
         lambda s: F.struct(

@@ -27,6 +27,21 @@ Scale notes (100 TB posture):
   against a budget of about files × open cost / cores, so the scan still
   gets about ``cores`` partitions. 1 MiB still keeps a split worth a task:
   about 0.15 s of CSV parsing on one core (SCALE.md, round 17).
+* Stream checkpoints go through Spark's ``FileSystemBasedCheckpointFileManager``
+  (:data:`CHECKPOINT_FILE_MANAGER`) instead of the default
+  ``FileContextBasedCheckpointFileManager``. Both write every offsets,
+  commits, sources, metadata, state-delta, state-schema and
+  operator-metadata file as a temp file plus a rename. The default renames
+  through ``FileContext.rename``, which on the local file system checks the
+  destination with ``getFileLinkStatus``; without a native libhadoop (the
+  pip pyspark ships none) that forks a ``readlink`` process for every
+  checkpoint file and its ``.crc``, nearly half of them serially on the
+  stream execution thread: 72 of the ~99 process forks of a warm
+  availableNow drain of the two ``query_tail`` streams.
+  The FileSystem manager renames with ``FileSystem.rename``
+  (``File.renameTo`` locally: atomic on a POSIX file system, no fork). The
+  checkpoint file checksums stay on. A cluster whose checkpoints live on
+  another store sets the manager that store needs (SCALE.md, round 17).
 """
 
 from __future__ import annotations
@@ -42,6 +57,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Posture, not correctness: ensure_session_conf leaves a foreign session's
 # value alone.
 FILES_OPEN_COST_BYTES = 1 << 20
+
+# Stream checkpoint writer of engine-built sessions (see "Scale notes"
+# above). Posture, like the split floor: builder only.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # Sessions already pinned by ensure_session_conf (weak — a stopped
 # session drops out). Pinning is idempotent, but each conf.set is a
@@ -107,6 +129,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.files.openCostInBytes", str(FILES_OPEN_COST_BYTES))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

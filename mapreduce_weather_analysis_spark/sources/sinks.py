@@ -18,7 +18,11 @@ each directory and file a write creates, ``.crc`` sidecars included. On a 4-vCPU
 forks 125 times per run, 113 of them inside its write tasks (the
 weather table's 36 month directories, 36 part files and 36 ``.crc``
 files among them); ``job1`` and ``job2`` fork 9 times each (SCALE.md,
-round 17).
+round 17). These batch writes still fork a ``chmod`` per file. Stream
+checkpoint renames no longer fork: engine-built sessions write
+checkpoints through the FileSystem checkpoint manager
+(``session.CHECKPOINT_FILE_MANAGER``), where the default manager forked
+a ``readlink`` for every checkpoint file and its ``.crc``.
 """
 
 from __future__ import annotations

@@ -40,7 +40,7 @@ TABLE_NAMES = (
 # rows, no results, nothing is computed until the caller's own action,
 # so every bench/oracle invocation still computes from the parquet
 # inputs. Held per live session (weakly — a stopped session drops its
-# entries) as one (identity, df) entry per path: a changed input
+# entries) as one (identity, df, raw df) entry per path: a changed input
 # replaces its entry instead of accumulating beside it. The identity is
 # (size, mtime_ns) for a single file — one os.stat, the common case —
 # and (relpath, size, mtime_ns) of every file under a directory, so a
@@ -76,22 +76,38 @@ def _stamp(path: str) -> str:
     return "{}:{}".format(*_identity(path))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """The memo entry of ``{sf_dir}/{name}.parquet``: (identity, table,
+    raw) — ``raw`` is the relation as the parquet files declare it,
+    ``table`` the one :func:`load_table` serves."""
     ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = _identity(path)
     per_session = _RELATION_CACHE.setdefault(spark, {})
     hit = per_session.get(path)
     if hit is not None and hit[0] == key:
-        return hit[1]
-    df = spark.read.parquet(path)
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        return hit
+    raw = df = spark.read.parquet(path)
+    if name == "events" and isinstance(raw.schema["ts"].dataType, T.LongType):
         # TIMESTAMP(NANOS) read as int64 nanos (see session.py): rebuild a
         # µs timestamp — floor division matches DuckDB's ns→µs truncation.
         # integer `div`, not `/`: ns values (~1.7e18) exceed double precision
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    per_session[path] = (key, df)
-    return df
+        df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    per_session[path] = (key, df, raw)
+    return per_session[path]
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return _resolve(spark, sf_dir, name)[1]
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The table's schema as its parquet files declare it, before
+    :func:`load_table`'s rebuilds (``events.ts`` as int64 nanos or as a
+    µs timestamp). Read from the relation memo: once the table is
+    resolved this runs no Spark job (PySpark keeps a DataFrame's schema
+    after its first read, and ``load_table`` reads it for ``events``)."""
+    return _resolve(spark, sf_dir, name)[2].schema
 
 
 def load_tables(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import ensure_session_conf
+from ..sources.tables import raw_schema
 
 _DRAIN_ROOT: str | None = None
 
@@ -71,11 +72,13 @@ def _stream_table(
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_conf(spark)
-    # readStream needs an explicit schema; probe the batch footer so the
-    # stream adapts to either fixture vintage — TIMESTAMP(NANOS) → int64
-    # under nanosAsLong (rebuilt to µs below, DuckDB's truncation), or plain
-    # µs timestamps (read directly; NTZ inference is off per session.py).
-    ts_type = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
+    # readStream needs an explicit schema; take the raw ts type from the
+    # relation memo so the stream adapts to either fixture vintage —
+    # TIMESTAMP(NANOS) → int64 under nanosAsLong (rebuilt to µs below,
+    # DuckDB's truncation), or plain µs timestamps (read directly; NTZ
+    # inference is off per session.py). The memo re-resolves a rewritten
+    # file, and a memoized table costs no Spark job per build.
+    ts_type = raw_schema(spark, sf_dir, "events")["ts"].dataType
     raw = _stream_table(
         spark, sf_dir, "events", _events_stream_schema(ts_type)
     )

@@ -1023,3 +1023,49 @@ def test_one_row_aggregate_joins_are_broadcast_hinted(spark):
         plan = _plan(REGISTRY[name].fn(spark, SMOKE_SF))
         assert "CartesianProduct" not in plan, name
         assert _n_ops(plan, "BroadcastNestedLoopJoin") >= 1, name
+
+
+def test_array_literal_plan_equals_per_float_lits(spark):
+    """The centroid literal parsed from one SQL string optimizes to the
+    same plan (modulo expression ids) and the same values, bit for bit,
+    as the ``F.array`` of ``F.struct(F.array(F.lit ...))`` it replaced."""
+    import math
+    import struct
+
+    from mapreduce_weather_analysis_spark.functions.vectors import array_literal
+    from mapreduce_weather_analysis_spark.plans.streaming_suite import (
+        _centroid_literal,
+    )
+
+    cents = [
+        {"c": [0.1, -2.5, 1e-05, -0.0, math.pi, 1e300, 5e-324], "cluster": 0},
+        {"c": [1 / 3, -1e-300, 123456789.125, 0.0, 2.0**-1074, -7.0, 1e16], "cluster": 1},
+    ]
+    old = F.array(
+        *[
+            F.struct(
+                F.array(*[F.lit(float(x)) for x in r["c"]]).alias("c"),
+                F.lit(int(r["cluster"])).alias("cluster"),
+            )
+            for r in cents
+        ]
+    )
+    new = _centroid_literal(cents)
+
+    def optimized(col) -> str:
+        df = spark.range(1).select(col.alias("arr"))
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    assert optimized(new) == optimized(old)
+
+    def bits(col) -> list:
+        [row] = spark.range(1).select(col.alias("arr")).collect()
+        return [
+            ([struct.pack(">d", x) for x in s["c"]], s["cluster"]) for s in row.arr
+        ]
+
+    assert bits(new) == bits(old)
+    for bad in (float("nan"), float("inf"), -float("inf")):
+        with pytest.raises(ValueError):
+            array_literal([1.0, bad])

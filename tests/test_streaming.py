@@ -334,3 +334,125 @@ def test_foreach_batch_merge_sink(spark, tmp_path):
         latest = f.read().strip()
     snaps = sorted(d for d in os.listdir(target) if d.startswith("snap-"))
     assert latest in snaps and len(snaps) >= 2
+
+
+def test_stateful_stream_resumes_from_its_checkpoint(spark, tmp_path):
+    """A restarted stateful stream must resume from its own checkpoint:
+    drain one file, add a second, restart on the same checkpoint
+    directory, and the per-key state carries over (user 1: 1 → 3) while
+    the offset and commit logs hold exactly batches 0 and 1. Every log
+    entry, state delta and schema file is written through the session's
+    checkpoint file manager (temp file plus rename), so this reopens
+    what that manager wrote."""
+    import glob
+    import os
+    import shutil
+
+    from mapreduce_weather_analysis_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == CHECKPOINT_FILE_MANAGER
+    )
+    src = tmp_path / "resume_src"
+    src.mkdir()
+    ckpt = str(tmp_path / "resume_ckpt")
+    schema = T.StructType([T.StructField("user_id", T.LongType())])
+
+    def write_file(name, users):
+        spark.createDataFrame([(u,) for u in users], schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(tmp_path / "tmp" / name))
+        [part] = glob.glob(str(tmp_path / "tmp" / name / "part-*.parquet"))
+        shutil.copy(part, str(src / f"{name}.parquet"))
+
+    def drain(run: int) -> dict[int, int]:
+        name = f"resume_test_{run}"
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(str(src))
+            .groupBy("user_id")
+            .count()
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return {r.user_id: r["count"] for r in spark.table(name).collect()}
+
+    def batches(log: str) -> list[str]:
+        return sorted(n for n in os.listdir(os.path.join(ckpt, log)) if n.isdigit())
+
+    write_file("f1", [1, 2])
+    assert drain(1) == {1: 1, 2: 1}
+    write_file("f2", [1, 1])
+    assert drain(2) == {1: 3, 2: 1}
+    assert batches("offsets") == ["0", "1"]
+    assert batches("commits") == ["0", "1"]
+
+
+def test_events_stream_build_runs_no_job_once_memoized(spark, tmp_path):
+    """read_events_stream takes the raw ``ts`` type from the relation
+    memo: the first build of a table resolves it (one schema job), every
+    later build submits no Spark job at all."""
+    import shutil
+
+    from mapreduce_weather_analysis_spark.streaming.events_stream import (
+        read_events_stream,
+    )
+
+    shutil.copy(f"{SMOKE_SF}/events.parquet", tmp_path / "events.parquet")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(build) -> int:
+        group = f"probe-{time.monotonic_ns()}"
+        sc.setJobGroup(group, "events stream build")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    assert jobs_of(lambda: read_events_stream(spark, str(tmp_path))) >= 1
+    assert jobs_of(lambda: read_events_stream(spark, str(tmp_path))) == 0
+
+
+def test_events_stream_follows_a_rewritten_ts_vintage(spark, tmp_path):
+    """Rewriting ``events.parquet`` from µs timestamps to TIMESTAMP(NANOS)
+    (read as int64 nanos) must re-resolve the memoized raw type: the
+    stream declares the new type and drains the same instants."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_weather_analysis_spark.sources.tables import raw_schema
+    from mapreduce_weather_analysis_spark.streaming.events_stream import (
+        read_events_stream,
+        run_available_now,
+    )
+
+    sf = str(tmp_path)
+    path = tmp_path / "events.parquet"
+    micros = pq.read_table(f"{SMOKE_SF}/events.parquet")
+    assert micros.schema.field("ts").type == pa.timestamp("us")
+    pq.write_table(micros, path)
+
+    def drained() -> list[tuple]:
+        ev = read_events_stream(spark, sf).select("event_id", "ts")
+        return sorted(map(tuple, run_available_now(ev, spark, "append").collect()))
+
+    want = drained()
+    assert isinstance(raw_schema(spark, sf, "events")["ts"].dataType, T.TimestampType)
+    assert len(want) == micros.num_rows
+
+    nanos = micros.set_column(
+        micros.schema.get_field_index("ts"),
+        "ts",
+        micros.column("ts").cast(pa.timestamp("ns")),
+    )
+    pq.write_table(nanos, path)
+    assert isinstance(raw_schema(spark, sf, "events")["ts"].dataType, T.LongType)
+    assert drained() == want
