@@ -60,10 +60,6 @@ def dsum_sql(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
-def davg_sql(expr: str, scale: int = 2) -> str:
-    return f"{dsum_sql(expr, scale)} / COUNT({expr})"
-
-
 def psum(expr: Column, scale: int = 6, alias: str | None = None) -> Column:
     """Order-independent SUM over a computed double expression (e.g. a
     product like ``price * (1 - discount)``).

@@ -188,23 +188,6 @@ def score_pairs(
     )
 
 
-def imi_topk(
-    emb: DataFrame,
-    query_filter: str,
-    k_neighbors: int = 5,
-    nprobe: int = IMI_NPROBE,
-    iters: int = IVF_ITERS,
-) -> DataFrame:
-    """Build + search in one query: train the two half-quantizers, pair
-    the codes, probe nprobe² cell pairs, exact cosine within them."""
-    assigned, cent1, cent2 = imi_index(emb, iters=iters)
-    queries = assigned.where(F.expr(query_filter)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pairs = imi_pairs(queries, cent1, cent2, nprobe=nprobe)
-    return score_pairs(pairs, assigned, queries, k_neighbors)
-
-
 # --- DuckDB oracle twin ------------------------------------------------------
 
 

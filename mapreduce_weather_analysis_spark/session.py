@@ -42,13 +42,43 @@ Scale notes (100 TB posture):
   (``File.renameTo`` locally: atomic on a POSIX file system, no fork). The
   checkpoint file checksums stay on. A cluster whose checkpoints live on
   another store sets the manager that store needs (SCALE.md, round 17).
+* Local file modes are set without a fork: the ``file:`` file system is
+  :data:`NIO_LOCAL_FS`, the checksummed ``LocalFileSystem`` over a raw file
+  system whose ``setPermission`` calls ``Files.setPosixFilePermissions``
+  (source: ``jvm/NioLocalFileSystem.java``). Without a native libhadoop
+  the stock ``RawLocalFileSystem.setPermission`` forks a ``chmod`` for
+  every directory, file and ``.crc`` a write or a stream checkpoint
+  creates, at 3-4 ms a fork: 125 per perfbench ``ingest``, 26 per warm
+  stream drain. Only the nine rwx bits take the in-process path; a mode
+  with the sticky bit set still forks, so it is kept exactly, and the
+  umask is still applied by Hadoop before the call. The stock class here
+  is Hive's ``ProxyLocalFileSystem`` (``hive-exec`` registers it for
+  ``file:``), which adds one rule to ``LocalFileSystem``: a rename onto
+  an existing file returns false. The new class keeps that rule. The jar
+  is compiled with the host's ``javac`` against the bundled Hadoop client
+  jar, once per source and Hadoop version, into ``jvm/build/``. Fail safe:
+  with no ``javac``, a failed compile, an unwritable build directory or a
+  gateway JVM already running without the jar, the session starts on the
+  stock class; ``fs.file.impl`` never names a class the JVM cannot load.
+  Builder only, like the split floor: a foreign session keeps its file
+  system (SCALE.md, round 17).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 from weakref import WeakSet
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkConf, SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -64,6 +94,13 @@ CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+# Local file system of engine-built sessions (see "Scale notes" above),
+# compiled from _NIO_FS_SOURCE into the gitignored _NIO_FS_BUILD_DIR.
+# Posture, like the split floor: builder only.
+NIO_LOCAL_FS = "mapreduce_weather_analysis_spark.jvm.NioLocalFileSystem"
+_NIO_FS_SOURCE = Path(__file__).resolve().parent / "jvm" / "NioLocalFileSystem.java"
+_NIO_FS_BUILD_DIR = _NIO_FS_SOURCE.parent / "build"
 
 # Sessions already pinned by ensure_session_conf (weak — a stopped
 # session drops out). Pinning is idempotent, but each conf.set is a
@@ -109,6 +146,75 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def build_nio_fs_jar(build_dir: Path, hadoop_jar: Path) -> Path | None:
+    """The jar of :data:`NIO_LOCAL_FS` compiled against ``hadoop_jar``.
+
+    The jar is cached in ``build_dir`` under a name keyed on the source
+    hash and ``hadoop_jar``'s file name, and written through a temp file
+    and a rename, so concurrent builders never see a partial jar. Returns
+    None when the host has no ``javac``, the compile fails or
+    ``build_dir`` is not writable."""
+    key = hashlib.sha256(
+        _NIO_FS_SOURCE.read_bytes() + hadoop_jar.name.encode()
+    ).hexdigest()[:16]
+    jar = build_dir / f"NioLocalFileSystem-{key}.jar"
+    if jar.is_file():
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    try:
+        build_dir.mkdir(parents=True, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=build_dir) as tmp:
+            classes = Path(tmp) / "classes"
+            subprocess.run(
+                # the class must load on Spark 4's minimum Java runtime
+                [javac, "--release", "17", "-cp", str(hadoop_jar),
+                 "-d", str(classes), str(_NIO_FS_SOURCE)],
+                check=True,
+                capture_output=True,
+            )
+            partial = Path(tmp) / jar.name
+            with zipfile.ZipFile(partial, "w") as z:
+                for cls in sorted(classes.rglob("*.class")):
+                    z.write(cls, cls.relative_to(classes).as_posix())
+            os.replace(partial, jar)
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return jar
+
+
+@functools.cache
+def _nio_fs_jar() -> str | None:
+    """:func:`build_nio_fs_jar` for the bundled Hadoop client, looked up
+    once per process so session restarts pay nothing."""
+    jars = sorted(Path(_find_spark_home(), "jars").glob("hadoop-client-api-*.jar"))
+    if not jars:
+        return None
+    jar = build_nio_fs_jar(_NIO_FS_BUILD_DIR, jars[-1])
+    return None if jar is None else str(jar)
+
+
+def _nio_fs_classpath() -> str | None:
+    """The driver class path that carries :data:`NIO_LOCAL_FS`, or None
+    when the session must keep the stock file system."""
+    jar = _nio_fs_jar()
+    if jar is None:
+        return None
+    if SparkContext._jvm is not None:
+        # a running JVM keeps the class path it was launched with
+        try:
+            SparkContext._jvm.java.lang.Class.forName(NIO_LOCAL_FS)
+        except Py4JJavaError:
+            return None
+    existing = SparkConf().get("spark.driver.extraClassPath")
+    if not existing:
+        return jar
+    if jar in existing.split(os.pathsep):
+        return existing
+    return existing + os.pathsep + jar
+
+
 def get_spark(
     app_name: str = "mapreduce_weather_analysis_spark",
     shuffle_partitions: int | None = None,
@@ -121,7 +227,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
-    spark = (
+    builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -138,7 +244,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-        .getOrCreate()
     )
+    classpath = _nio_fs_classpath()
+    if classpath is not None:
+        builder = builder.config("spark.driver.extraClassPath", classpath).config(
+            "spark.hadoop.fs.file.impl", NIO_LOCAL_FS
+        )
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return ensure_session_conf(spark)

@@ -10,19 +10,19 @@ key (the month bucket here), rebalanced on it so AQE bounds each
 partition's files by its advisory size, not by one file per (scan task
 x partition), i.e. splits x months of KB-sized files.
 
-Local writes pay a fork per file and directory: without a native
-libhadoop (the pip-installed pyspark ships none), Hadoop 3.4.2's
+Local writes fork no process on engine-built sessions. Without a native
+libhadoop (the pip-installed pyspark ships none), Hadoop 3.4.2's stock
 ``RawLocalFileSystem.setPermission`` shells out to ``chmod`` once for
-each directory and file a write creates, ``.crc`` sidecars included. On a 4-vCPU host one fork costs 3.2-3.9 ms (a py4j
-``exists`` 0.06-0.08 ms). Over perfbench's weather CSV, ``ingest``
-forks 125 times per run, 113 of them inside its write tasks (the
-weather table's 36 month directories, 36 part files and 36 ``.crc``
-files among them); ``job1`` and ``job2`` fork 9 times each (SCALE.md,
-round 17). These batch writes still fork a ``chmod`` per file. Stream
-checkpoint renames no longer fork: engine-built sessions write
-checkpoints through the FileSystem checkpoint manager
-(``session.CHECKPOINT_FILE_MANAGER``), where the default manager forked
-a ``readlink`` for every checkpoint file and its ``.crc``.
+each directory and file a write creates, ``.crc`` sidecars included: on
+a 4-vCPU host 3.2-3.9 ms a fork (a py4j ``exists`` 0.06-0.08 ms), 125
+forks per perfbench ``ingest`` (113 inside its write tasks) and 9 per
+``job1`` or ``job2``. Engine-built sessions set modes in-process through
+``session.NIO_LOCAL_FS`` instead, with the same mode bits (0755
+directories, 0644 files), and write stream checkpoints through the
+FileSystem checkpoint manager (``session.CHECKPOINT_FILE_MANAGER``),
+which renames without the ``readlink`` fork of the default manager. A
+foreign session keeps its stock file system and so still forks
+(SCALE.md, round 17).
 """
 
 from __future__ import annotations
@@ -31,10 +31,6 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
 
 
 def write_parquet(
